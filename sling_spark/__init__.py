@@ -30,8 +30,6 @@ Package layout
                   paths.
 - ``multimodal/`` binary-column (image/audio) plumbing; codecs stubbed.
 - ``plans/``      plan-inspection helpers (explain/pushdown assertions).
-- ``workflow.py`` the reference workflow-builder facade (map/filter/
-                  shuffle/reduce/mapreduce over DataFrames).
 - ``serving.py``  KB query/serving views (item fetch, phrase lookup,
                   name prefix search).
 """

@@ -2161,12 +2161,12 @@ def q_kg_phrase_structure(spark, sf_dir):
     foundation, developed-by). Oracle: the shared scalar analyzer run
     driver-side over the INDEPENDENT oracle's mentions + phrase table +
     fact closure."""
-    from .kg.assets import build_assets, seed_dataframes
+    from .kg.assets import build_asset_store, store_location
     from .kg.phrase_structure import phrase_structure
     from .kg.pipeline import run_pipeline
 
     res = run_pipeline(spark, n_files=40)
-    assets_bc, _ = build_assets(spark, res["doc_stats"], seed_dataframes(spark))
+    assets_bc, _ = build_asset_store(spark, res["doc_stats"], store_location(spark))
     return phrase_structure(res["mentions"], assets_bc).distinct()
 
 
@@ -2495,7 +2495,7 @@ def q_kg_stream_triples(spark, sf_dir):
     this query shares kg_triples' independent-oracle VALUES gold."""
     import tempfile
 
-    from .kg.assets import build_assets, seed_dataframes
+    from .kg.assets import build_asset_store, seed_dataframes
     from .kg.documents import build_documents, latest_versions
     from .kg.reconcile import (
         invert_statements,
@@ -2520,7 +2520,9 @@ def q_kg_stream_triples(spark, sf_dir):
     full = latest_versions(corpus_df(spark, 40, partitions=4)).persist()
     try:
         seed = seed_dataframes(spark)
-        assets_bc, _ = build_assets(spark, build_documents(full), seed)
+        assets_bc, _ = build_asset_store(
+            spark, build_documents(full), f"{tmp}/assets", seed
+        )
 
         # increment 1: half the files; increment 2: the rest
         full.filter(F.xxhash64("path") % 2 == 0).write.parquet(src)

@@ -1,4 +1,4 @@
-"""Broadcast-side KB assets (the auxin/commons analog).
+"""KB assets for the annotator (the auxin/commons analog).
 
 SLING annotators receive read-only assets — commons store, phrase table,
 IDF dictionary — via workflow ``auxin`` inputs, memory-mapped once per
@@ -6,17 +6,13 @@ worker (python/task/workflow.py:667-689; sling/nlp/silver/silver.py
 equivalent at python/nlp/silver.py:120-138). Our analog: every asset is
 built AS a DataFrame **derived from the KB tables** (items/aliases — at
 real scale these come from the wikidata importer; the derivations are
-identical), then consumed one of two ways:
-
-- ``mode="broadcast"`` (default, KB ≪ driver memory): collect the
-  dimension-sized lookup tables and ``sc.broadcast`` the dicts.
-- ``mode="store"`` (the 100×-scale path): write each asset DataFrame to
-  Parquet and broadcast only the PATHS; every Python worker lazily reads
-  the Parquet columnarly (pyarrow) and builds its lookup structures once
-  per process — the exact analog of SLING memory-mapping its repository
-  files per worker (sling/file/repository.h:30-60). The driver never
-  materializes the tables, so the asset size is bounded by executor
-  memory, not ``sc.broadcast`` / driver limits.
+identical) and written to a Parquet ``AssetStore``. Only the store's
+PATH is broadcast; every Python worker lazily reads the Parquet
+columnarly (pyarrow) and builds its lookup structures once per process —
+the exact analog of SLING memory-mapping its repository files per worker
+(sling/file/repository.h:30-60). The driver never materializes the
+tables, so the asset size is bounded by executor memory, not
+``sc.broadcast`` / driver limits.
 
 Asset derivations (fixture literals are NOT consulted — parity with the
 seed-literal dicts is pytest-enforced):
@@ -34,7 +30,10 @@ seed-literal dicts is pytest-enforced):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import uuid
 from dataclasses import dataclass
 
@@ -44,7 +43,7 @@ from pyspark.sql import functions as F
 from ..sources import kb
 from .documents import idf_table
 from .mentions import KbAssets
-from .phrase_table import build_phrase_table, phrase_table_dict, select_aliases
+from .phrase_table import build_phrase_table, select_aliases
 
 ALIAS_SCHEMA = "entity string, alias string, fp long, count int, form int, sources int"
 ITEMS_DDL = (
@@ -89,7 +88,7 @@ def links_from_items(items: DataFrame) -> DataFrame:
     Row multiplicity is preserved (the resolver sums contributions).
     Literal objects (dates/numbers) are excluded — the reference's
     target.IsRef() test: literal keys can never match a phrase-table
-    candidate, they only bloat the broadcast dict and the per-mention
+    candidate, they only bloat the links table and the per-mention
     context updates (lock-step with kb.links_rows)."""
     from ..sources.kb import ITEM_REF_RE
 
@@ -149,13 +148,13 @@ def asset_dataframes(
 
 
 # ---------------------------------------------------------------------------
-# store mode: Parquet-backed, worker-side lazy loading
+# the asset store: Parquet-backed, worker-side lazy loading
 # ---------------------------------------------------------------------------
 
 
 @dataclass(frozen=True)
 class AssetStore:
-    """Tiny picklable handle broadcast INSTEAD of the asset dicts: the
+    """Tiny picklable handle broadcast instead of the asset tables: the
     Parquet directory each worker loads lazily (and caches per process).
     ``path`` must be worker-visible (shared FS / object store on a real
     cluster; pyarrow reads s3://, hdfs:// and local paths alike).
@@ -196,7 +195,7 @@ def load_assets(store: AssetStore) -> KbAssets:
     ):
         es = [(e["entity"], e["count"], e["form"], e["reliable"]) for e in entries]
         es.sort(key=lambda t: (-t[1], t[0]))
-        phrase_table[fp] = es
+        phrase_table[fp] = es  # lookup order: count desc, entity asc
 
     idf_tab = read("idf")
     idf = dict(zip(idf_tab["fp"].to_pylist(), idf_tab["idf"].to_pylist()))
@@ -239,91 +238,35 @@ def load_assets(store: AssetStore) -> KbAssets:
     return assets
 
 
-def resolve_assets(value) -> KbAssets:
-    """Annotator-side dispatch: a broadcast may carry the materialized
-    ``KbAssets`` (broadcast mode) or an ``AssetStore`` handle (store
-    mode, loaded lazily per worker)."""
-    if isinstance(value, AssetStore):
-        return load_assets(value)
-    return value
-
-
 # ---------------------------------------------------------------------------
 # build entry points
 # ---------------------------------------------------------------------------
 
 
-def _kb_dicts(dfs: dict[str, DataFrame]):
-    """Collect the KB-derived asset DataFrames into the broadcast dicts
-    (broadcast mode): (links, popularity, statements, gender). Each
-    table is dimension-sized (items/aliases scale); IDF is the one
-    corpus-dependent table and is collected by the caller."""
-    links: dict[str, list[tuple[str, int]]] = {}
-    for r in dfs["links"].collect():
-        links.setdefault(r["src"], []).append((r["dst"], r["count"]))
-    for v in links.values():
-        v.sort()  # deterministic context-update order
-    popularity = {r["id"]: r["count"] for r in dfs["popularity"].collect()}
-    statements: dict[str, set] = {}
-    for r in dfs["facts"].collect():
-        statements.setdefault(r["subj"], set()).add((r["pid"], r["obj"]))
-    gender = {r["id"]: r["gender"] for r in dfs["gender"].collect()}
-    return links, popularity, statements, gender
-
-
-def phrase_table_future(
-    spark: SparkSession, seed: dict[str, DataFrame], min_count: int = 2
-):
-    """Launch the corpus-INDEPENDENT asset builds (phrase table + links/
-    popularity/facts/gender dicts) on a second job-submitter thread, so
-    their Spark jobs interleave into free task slots while the corpus
-    stages run — the reference's workflow scheduler runs independent
-    task branches in parallel the same way (python/task/workflow.py
-    worker pools). Spark job submission is thread-safe. Returns a future
-    of (phrase_table_df, phrase_table_dict, asset_dicts)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="asset-branch")
-
-    def run():
-        dfs = asset_dataframes(spark, seed, min_alias_count=min_count)
-        pt_df = dfs["phrase_table"]
-        pt = phrase_table_dict(pt_df)
-        return pt_df, pt, _kb_dicts(dfs)
-
-    fut = pool.submit(run)
-    pool.shutdown(wait=False)
-    return fut
-
-
-def build_assets(
+def store_location(
     spark: SparkSession,
-    documents: DataFrame,
-    seed: dict[str, DataFrame] | None = None,
-    min_alias_count: int = 2,
-    pt_future=None,
-):
-    """Broadcast-mode asset build: run the alias-selection + phrase-table
-    + IDF + link/popularity/fact/gender builds in Spark (all DataFrame-
-    derived from the KB tables), collect the dimension-sized lookups,
-    broadcast. Returns (broadcast, phrase_table_df). For a KB that
-    outgrows the driver, use :func:`build_asset_store` instead."""
-    seed = seed or seed_dataframes(spark)
-    if pt_future is None:
-        pt_future = phrase_table_future(spark, seed, min_alias_count)
-    idf_df = idf_table(documents)
-    idf = {r["fp"]: r["idf"] for r in idf_df.collect()}
-    pt_df, pt, (links, popularity, statements, gender) = pt_future.result()
-
-    assets = KbAssets(
-        phrase_table=pt,
-        idf=idf,
-        popularity=popularity,
-        links=links,
-        statements=statements,
-        gender=gender,
-    )
-    return spark.sparkContext.broadcast(assets), pt_df
+    asset_store_dir: str | None = None,
+    checkpoint_dir: str | None = None,
+) -> str:
+    """Where a build writes its asset store: ``asset_store_dir`` if
+    given, else ``<checkpoint_dir>/assets`` (worker-visible by the
+    checkpoint's own contract), else — on a ``local`` master only — a
+    fresh driver-local temp dir removed at interpreter exit. On a
+    cluster a driver-local dir is invisible to executors, so that case
+    is an error."""
+    if asset_store_dir:
+        return asset_store_dir
+    if checkpoint_dir:
+        return checkpoint_dir.rstrip("/") + "/assets"
+    master = spark.sparkContext.master
+    if master != "local" and not master.startswith("local["):
+        raise ValueError(
+            f"master {master!r} cannot read a driver-local asset store: "
+            "pass asset_store_dir or checkpoint_dir (a worker-visible path)"
+        )
+    path = tempfile.mkdtemp(prefix="sling_assets_")
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def asset_store_future(
@@ -332,13 +275,15 @@ def asset_store_future(
     store_dir: str,
     min_alias_count: int = 2,
 ):
-    """Store-mode analog of :func:`phrase_table_future`: launch the five
-    corpus-INDEPENDENT asset writes (phrase table, links, popularity,
-    facts, gender) on background job-submitter threads at pipeline
-    start, so their Spark jobs interleave into free task slots while the
-    corpus/documents/stats stages run. Only the IDF table depends on the
-    corpus; :func:`build_asset_store` writes it after the stats pass and
-    joins these writes. Pass the returned handle as ``store_future``."""
+    """Launch the five corpus-INDEPENDENT asset writes (phrase table,
+    links, popularity, facts, gender) on background job-submitter
+    threads, so their Spark jobs interleave into free task slots while
+    the corpus/documents/stats stages run — the reference's workflow
+    scheduler runs independent task branches in parallel the same way
+    (python/task/workflow.py worker pools; Spark job submission is
+    thread-safe). Only the IDF table depends on the corpus;
+    :func:`build_asset_store` writes it after the stats pass and joins
+    these writes. Pass the returned handle as ``store_future``."""
     from concurrent.futures import ThreadPoolExecutor
 
     dfs = asset_dataframes(spark, seed, min_alias_count=min_alias_count)
@@ -364,26 +309,23 @@ def build_asset_store(
     min_alias_count: int = 2,
     store_future=None,
 ):
-    """Store-mode asset build (the 100×-scale path): write every asset
-    DataFrame to ``store_dir`` as Parquet and broadcast only the
-    :class:`AssetStore` handle — NO driver-side collect anywhere, so the
-    phrase table / fact table can exceed driver memory and
-    ``spark.driver.maxResultSize`` entirely. Workers load the Parquet
-    lazily (pyarrow) and cache per process, the SLING repository
+    """Write every asset DataFrame to ``store_dir`` as Parquet and
+    broadcast only the :class:`AssetStore` handle — NO driver-side
+    collect anywhere, so the phrase table / fact table can exceed driver
+    memory and ``spark.driver.maxResultSize`` entirely. Workers load the
+    Parquet lazily (pyarrow) and cache per process, the SLING repository
     memory-map analog. Returns (broadcast-of-AssetStore,
     phrase_table_df).
 
     ``store_future`` (from :func:`asset_store_future`) means the five
-    corpus-independent writes were launched at pipeline start and have
-    been overlapping the corpus stages; only the IDF write remains."""
-    seed = seed or seed_dataframes(spark)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def write(item):
-        name, df = item
-        df.write.mode("overwrite").parquet(os.path.join(store_dir, name))
-
-    if store_future is not None and store_future["dir"] != store_dir:
+    corpus-independent writes were launched earlier and have been
+    overlapping the corpus stages; without one they start here, beside
+    the IDF write."""
+    if store_future is None:
+        store_future = asset_store_future(
+            spark, seed or seed_dataframes(spark), store_dir, min_alias_count
+        )
+    elif store_future["dir"] != store_dir:
         # a mismatched future means its background writes target a
         # different directory and would never be joined — their errors
         # would vanish into a dead executor. Fail loudly (caller bug).
@@ -391,23 +333,11 @@ def build_asset_store(
             f"store_future targets {store_future['dir']!r}, "
             f"build_asset_store got store_dir={store_dir!r}"
         )
-    if store_future is not None:
-        idf_df = idf_table(documents)
-        write(("idf", idf_df))
-        for f in store_future["writes"]:
-            f.result()  # join + propagate any background write error
-        dfs = dict(store_future["dfs"], idf=idf_df)
-    else:
-        dfs = asset_dataframes(spark, seed, min_alias_count=min_alias_count)
-        dfs = dict(dfs, idf=idf_table(documents))
-        # concurrent writes: the 5 KB-derived tables are corpus-independent
-        # and small, while the IDF table runs the corpus tokenize pass —
-        # submitting all six jobs at once lets the dimension writes fill
-        # slots the wide IDF job leaves idle instead of serializing a
-        # scheduling tail after it (same overlap the broadcast mode gets
-        # from phrase_table_future)
-        with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-            list(ex.map(write, dfs.items()))
+    idf_table(documents).write.mode("overwrite").parquet(
+        os.path.join(store_dir, "idf")
+    )
+    for f in store_future["writes"]:
+        f.result()  # join + propagate any background write error
     # unique build token: rebuilding at the same path must invalidate
     # worker-side _STORE_CACHE entries from earlier builds (ADVICE r02)
     token = uuid.uuid4().hex
@@ -417,4 +347,4 @@ def build_asset_store(
     except OSError:
         pass  # non-local FS: the token in the handle is authoritative
     store = AssetStore(path=store_dir, token=token)
-    return spark.sparkContext.broadcast(store), dfs["phrase_table"]
+    return spark.sparkContext.broadcast(store), store_future["dfs"]["phrase_table"]

@@ -23,11 +23,11 @@ resolver.cc, sling/nlp/silver/relations.cc), per sentence unit:
 The reference runs these as ONE annotator chain per document
 (silver.py:105-169); we do the same: ONE Arrow-batched mapInPandas pass
 emits mention rows and relation rows together (a `kind` column splits
-them), with the phrase table / IDF / links / popularity / facts either
-broadcast or loaded worker-side from a Parquet asset store
-(assets.AssetStore) — both analogs of SLING memory-mapping its
-repository files per worker (sling/file/repository.h:30-60). No shuffle
-anywhere in the annotation path.
+them), with the phrase table / IDF / links / popularity / facts loaded
+worker-side from a Parquet asset store (assets.AssetStore; only its
+path is broadcast) — the analog of SLING memory-mapping its repository
+files per worker (sling/file/repository.h:30-60). No shuffle anywhere
+in the annotation path.
 
 Execution split (round-2 vectorization): candidate-span ENUMERATION
 (SpanPopulator + pruners + the literal date/number/measure annotators)
@@ -431,7 +431,7 @@ def _literal_candidates(
 class _NpAssets:
     """Executor-side derived lookup arrays: sorted key arrays for the
     vectorized membership/IDF probes plus the per-entity ordered-facts
-    cache (pure function of the broadcast assets, so safe to share
+    cache (pure function of the worker's assets, so safe to share
     across documents/batches within a Python worker)."""
 
     __slots__ = ("pt_keys", "idf_keys", "idf_vals", "ordered_facts")
@@ -894,12 +894,11 @@ def annotate(
 
     def run(batches):
         from ..functions.tokenize import tokenize_arrays
-        from .assets import resolve_assets
+        from .assets import load_assets
 
-        # the broadcast carries either the materialized KbAssets or an
-        # AssetStore handle (Parquet-backed lazy loading — the scale
-        # path for a KB that outgrows driver collect/broadcast)
-        assets = resolve_assets(assets_bc.value)
+        # the broadcast carries only the AssetStore handle; the Parquet
+        # tables load once per worker process
+        assets = load_assets(assets_bc.value)
         npa = _np_assets(assets)
         for pdf in batches:
             data = {c: [] for c in cols}

@@ -104,15 +104,15 @@ def analyze_phrase(
 
 def phrase_structure(mentions: DataFrame, assets_bc) -> DataFrame:
     """Sub-mention rows for every resolved multi-word mention (one
-    Arrow-batched pass; assets come from the same broadcast/store handle
-    the annotator uses). Literal spans (fp == 0) and anaphors carry no
+    Arrow-batched pass; assets come from the same AssetStore handle the
+    annotator uses). Literal spans (fp == 0) and anaphors carry no
     phrase-table meaning and are skipped, as in the reference."""
 
     def run(batches):
         from ..functions.tokenize import tokenize
-        from .assets import resolve_assets
+        from .assets import load_assets
 
-        assets = resolve_assets(assets_bc.value)
+        assets = load_assets(assets_bc.value)
         pt, st = assets.phrase_table, assets.statements
 
         @lru_cache(maxsize=1 << 16)

@@ -8,7 +8,9 @@ Reference semantics:
   stores, per fp, entity entries sorted for lookup
   (sling/nlp/kb/phrase-table-builder.cc:36-237); the table records its
   normalization ("lcn", builder :105-107) and is memory-mapped by every
-  annotator worker — our analog is a Spark broadcast dict.
+  annotator worker — our analog is the Parquet asset store each worker
+  loads once (assets.AssetStore / load_assets, which also fixes the
+  lookup order: count desc, entity asc).
 
 Plan shape: one applyInPandas per entity (tiny groups) for variant
 folding, then one hash aggregation by fp. Both shuffles are on keys with
@@ -255,27 +257,3 @@ def build_name_table(selected: DataFrame) -> DataFrame:
         .orderBy("name")
     )
 
-
-def phrase_table_dict(phrase_table: DataFrame) -> dict[int, list[tuple]]:
-    """Collect the phrase table into a broadcastable dict
-    {fp: [(entity, count, form, reliable), ...]} — the analog of
-    memory-mapping the phrase-table repository on every worker
-    (sling/nlp/kb/phrase-table.h:60-62 Acquire).
-
-    The KB-side tables are dimension-sized (items/aliases), not
-    corpus-sized; at 100 TB corpus the phrase table is still ~GBs.
-    A table that outgrows driver collect/broadcast uses the Parquet-
-    backed worker-side store instead (assets.build_asset_store /
-    AssetStore): no driver materialization at all — workers lazily read
-    the Parquet per process, the repository memory-map analog.
-    """
-    rows = phrase_table.collect()
-    out: dict[int, list[tuple]] = {}
-    for r in rows:
-        entries = [
-            (e["entity"], e["count"], e["form"], e["reliable"]) for e in r["entries"]
-        ]
-        # deterministic lookup order: count desc, entity asc
-        entries.sort(key=lambda t: (-t[1], t[0]))
-        out[r["fp"]] = entries
-    return out

@@ -4,9 +4,9 @@ Stage DAG (SURVEY.md §7):
 
     corpus ─ documents(raw) ─┬─ doc_stats ─ idf ─┐
                              │                   ├─ mentions ─ relations ─ doc_triples
-    seed aliases ─ select ─ phrase_table ────────┘  (phrase-table branch │
-                   runs on a second job-submitter thread, overlapping   │
-                   the corpus stages)                                    │
+    seed KB ─ asset-store writes ────────────────┘  (the five corpus-    │
+                   independent asset writes run on background job-       │
+                   submitter threads, overlapping the corpus stages)     │
     seed same_as ─ xref clusters ──┬─ canonicalized triples ─────────────┤
     seed items + fragments ─ (+ inverse-property fragments)              │
                   ─ reconcile/merge ─ kb_items ─ kb_triples ─────────────┴─ triples
@@ -16,8 +16,9 @@ Stage DAG (SURVEY.md §7):
     stages cost a fixed ~6s at ANY corpus size / core count)
 
 (Synthetic, checkpoint-less runs replace the corpus→documents pair with
-the zero-shuffle `synthetic_documents` generator; asset consumption is
-either broadcast dicts or the Parquet-backed AssetStore.)
+the zero-shuffle `synthetic_documents` generator. Annotator assets reach
+the workers through the Parquet-backed AssetStore: see
+assets.store_location for where it is written.)
 
 Checkpointing (north rule "resumable from per-partition checkpoint"):
 every materialized stage is written to ``<dir>/<stage>`` as Parquet; a
@@ -36,7 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.corpus import corpus_df
-from .assets import build_assets, phrase_table_future, seed_dataframes  # noqa: F401
+from .assets import (
+    asset_store_future,
+    build_asset_store,
+    seed_dataframes,
+    store_location,
+)
 from .documents import doc_stats, latest_with_sha
 from .mentions import annotate, mentions_of, relations_of
 from .reconcile import invert_statements, kb_triples, merge_items, reconcile_items
@@ -81,21 +87,16 @@ def run_pipeline(
     """Run the full pipeline; returns every stage output by name.
 
     ``seed`` injects a different KB (e.g. wikidata-importer output) in
-    place of the seed fixtures; ``asset_store_dir`` switches annotator
-    assets to the Parquet-backed worker-side store (no driver collect —
-    the path for a KB that outgrows broadcast)."""
+    place of the seed fixtures; ``asset_store_dir`` is the worker-visible
+    directory of the annotator asset store (default: beside the
+    checkpoints, else a temp dir on a local master — see
+    assets.store_location)."""
     seed = seed or seed_dataframes(spark)
+    store_dir = store_location(spark, asset_store_dir, checkpoint_dir)
     # corpus-independent branches start immediately: their jobs
     # interleave with the corpus/documents/stats stages below (separate
     # job-submitter threads; Spark submission is thread-safe)
-    pt_future = None
-    store_future = None
-    if asset_store_dir:
-        from .assets import asset_store_future
-
-        store_future = asset_store_future(spark, seed, asset_store_dir)
-    else:
-        pt_future = phrase_table_future(spark, seed)
+    store_future = asset_store_future(spark, seed, store_dir)
 
     # seed-KB fuse branch (xref clusters + reconcile/merge): everything
     # here derives from the seed KB only, yet as a serial tail it costs
@@ -166,23 +167,14 @@ def run_pipeline(
     if checkpoint_dir is None:
         stats = stats.persist()
 
-    if asset_store_dir:
-        from .assets import build_asset_store
-
-        assets_bc, phrase_table = build_asset_store(
-            spark, stats, asset_store_dir, seed, store_future=store_future
-        )
-    else:
-        assets_bc, phrase_table = build_assets(
-            spark, stats, seed, pt_future=pt_future
-        )
+    assets_bc, phrase_table = build_asset_store(
+        spark, stats, store_dir, seed, store_future=store_future
+    )
 
     # ONE annotation pass emits mention + relation rows together (the
     # annotator-chain shape; relations are order-dependent within a
     # sentence, so they belong inside the per-document call). The
-    # equivalent join-based plan (mentions x broadcast(facts) x mentions
-    # + per-sentence solve) lives in relations.extract_relations and is
-    # kept result-identical by tests.
+    # independent check is the pure-Python oracle (oracle/kg_oracle.py).
     annotations = _materialize(
         annotate(documents, assets_bc), spark, checkpoint_dir, "annotations"
     )

@@ -1,38 +1,23 @@
-"""Relation (triple) extraction by distant supervision.
+"""Relation-extraction inputs and outputs as DataFrame plans.
 
-Reference semantics (sling/nlp/silver/relations.cc:28-227): per sentence,
-for each resolved mention S, fetch the KB facts of S's entity; if a
-fact's target entity is mentioned in the same sentence, link them,
-subject-spans processed left-to-right, facts tried in property-priority
-order (:38-55), the CLOSEST target mention wins, and each target mention
-receives at most ONE incoming relation (:70-188). Blocked properties
-(P279-style taxonomy edges, :56-66) never produce relations.
+Relations themselves are extracted by distant supervision inside the
+annotator chain (mentions.py step 5, reference
+sling/nlp/silver/relations.cc:28-227): they are order-dependent within
+a sentence, so they belong in the per-document call. This module holds
+the two plans around that call:
 
-Execution shape (Spark-first, SURVEY.md §2.7 mapping):
-- facts = exploded KB statements — dimension-sized → **broadcast** hash
-  join against mentions (no shuffle of the big side);
-- object-mention co-location = self-join of mentions on the sentence key
-  — Catalyst plans ONE shuffle by (doc, sentence) shared by the join and
-  the following per-sentence group solve;
-- the order-dependent constraint solving runs in applyInPandas per
-  sentence (groups are tiny: a sentence's candidate pairs).
+- ``facts_df`` — the KB fact table the annotator consults (written to
+  the asset store, assets.asset_dataframes);
+- ``doc_triples`` — the final document-triple shape of the relation
+  rows the annotator emits.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.kb import BLOCKED_PROPERTIES, PROPERTY_PRIORITY
-
-TRIPLES_SCHEMA = (
-    "repo string, path string, commit string, content_sha string, "
-    "sentence int, subj string, pred string, obj string, "
-    "begin int, end int"
-)
-
-_SENTENCE_KEY = ["repo", "path", "commit", "content_sha", "sentence"]
+from ..sources.kb import BLOCKED_PROPERTIES
 
 
 def facts_df(items: DataFrame) -> DataFrame:
@@ -77,103 +62,6 @@ def facts_df(items: DataFrame) -> DataFrame:
             .select("subj", F.col("grandparent").alias("parent"))
         )
     return out.distinct()
-
-
-_PRIO = {p: i for i, p in enumerate(PROPERTY_PRIORITY)}  # hoisted: built
-# once per worker import, not once per applyInPandas sentence group
-
-
-def _solve_sentence(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Apply ordering/priority/closest/one-per-target constraints for one
-    sentence's candidate (subject-span, fact, object-span) rows."""
-    prio = _PRIO
-    rows = pdf.to_dict("records")
-    # subjects in span order
-    subjects: dict[tuple[int, int], list[dict]] = {}
-    for r in rows:
-        subjects.setdefault((r["s_begin"], -r["s_end"]), []).append(r)
-    used: set[int] = set()
-    out = []
-    for key in sorted(subjects):
-        group = subjects[key]
-        # facts in priority order, deduped
-        facts: dict[tuple[str, str], list[dict]] = {}
-        for r in group:
-            facts.setdefault((r["pred"], r["obj"]), []).append(r)
-        ordered = sorted(
-            facts.items(), key=lambda kv: (prio.get(kv[0][0], 99), kv[0][0], kv[0][1])
-        )
-        for (_pred, _obj), cands in ordered:
-            avail = [c for c in cands if c["o_begin"] not in used]
-            if not avail:
-                continue
-            best = min(
-                avail,
-                key=lambda c: (abs(c["o_begin"] - c["s_begin"]), c["o_begin"]),
-            )
-            used.add(best["o_begin"])
-            out.append(
-                {
-                    "repo": best["repo"],
-                    "path": best["path"],
-                    "commit": best["commit"],
-                    "content_sha": best["content_sha"],
-                    "sentence": best["sentence"],
-                    "subj": best["subj"],
-                    "pred": best["pred"],
-                    "obj": best["obj"],
-                    "begin": best["s_begin"],
-                    "end": best["s_end"],
-                }
-            )
-    return pd.DataFrame(
-        out,
-        columns=[
-            "repo", "path", "commit", "content_sha", "sentence",
-            "subj", "pred", "obj", "begin", "end",
-        ],
-    )
-
-
-def extract_relations(mentions: DataFrame, facts: DataFrame) -> DataFrame:
-    """mentions × broadcast(facts) × mentions → per-sentence solve →
-    (doc, subj, pred, obj, span) triple rows."""
-    m1 = mentions.select(
-        *_SENTENCE_KEY,
-        F.col("entity").alias("subj"),
-        F.col("begin").alias("s_begin"),
-        F.col("end").alias("s_end"),
-    )
-    m2 = mentions.filter(~F.col("anaphora")).select(
-        # anaphors act as subjects but never as relation TARGETS
-        *_SENTENCE_KEY,
-        F.col("entity").alias("o_entity"),
-        F.col("begin").alias("o_begin"),
-    )
-    cand = (
-        m1.join(F.broadcast(facts), on="subj", how="inner")
-        .join(
-            m2,
-            on=_SENTENCE_KEY,
-            how="inner",
-        )
-        .filter(
-            (F.col("o_entity") == F.col("obj"))
-            & (F.col("o_begin") != F.col("s_begin"))
-        )
-        .select(
-            *_SENTENCE_KEY,
-            "subj",
-            F.col("pid").alias("pred"),
-            "obj",
-            "s_begin",
-            "s_end",
-            "o_begin",
-        )
-    )
-    return cand.groupBy(*_SENTENCE_KEY).applyInPandas(
-        _solve_sentence, schema=TRIPLES_SCHEMA
-    )
 
 
 def doc_triples(relations: DataFrame) -> DataFrame:

@@ -607,7 +607,8 @@ def dedup_clusters(
     Scale shape: components use the same large-star/small-star
     alternation as identifier xref (kg/xref.py — O(log n) rounds on any
     topology; a chain of 10^6 near-dup pairs converges), then one
-    component-keyed partial-agg count. Transitive closure is the
+    unordered count window over the component label for cluster_size
+    (a single exchange, no groupBy + join). Transitive closure is the
     CORRECT semantics for near-dup keep-lists at corpus scale: A~B and
     B~C must not both survive with B deleted."""
     from pyspark.sql.window import Window

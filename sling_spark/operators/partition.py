@@ -7,9 +7,6 @@
 | task/filter.cc:29-68 (discard) | discard       |
 | nlp/silver/corpus-split.cc:60  | corpus_split  |
 | identity / null sink           | trivial       |
-
-Plus the two scale tools SLING never needed but 1000-executor Spark
-does: heavy-key salting and an explicit skew report.
 """
 
 from __future__ import annotations
@@ -51,37 +48,3 @@ def corpus_split(df: DataFrame, key: str, ratio: int = 10,
         split_col, F.when(bucket == 0, F.lit("eval")).otherwise(F.lit("train"))
     )
 
-
-def salt_heavy_keys(df: DataFrame, key: str, heavy: DataFrame,
-                    salt_buckets: int = 16, salt_col: str = "salted_key") -> DataFrame:
-    """Skew mitigation: rows whose key is in ``heavy`` (a small table of
-    known-hot keys, e.g. mega-repos) get a composite key spreading them
-    over ``salt_buckets`` partitions; the join/agg then runs on the
-    salted key and re-merges. AQE skew-join handles the residual."""
-    # distinct BEFORE the left join: a heavy table with a repeated key
-    # (e.g. two concatenated skew reports) would otherwise fan out and
-    # double-count every row of exactly the hottest keys
-    heavy_marked = (
-        heavy.select(F.col(key)).distinct().withColumn("__is_heavy", F.lit(True))
-    )
-    out = df.join(F.broadcast(heavy_marked), on=key, how="left")
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
-    return out.withColumn(
-        salt_col,
-        F.when(
-            F.col("__is_heavy").isNotNull(),
-            F.concat_ws("#", F.col(key), salt.cast("string")),
-        ).otherwise(F.col(key)),
-    ).drop("__is_heavy")
-
-
-def skew_report(df: DataFrame, key: str, top: int = 20) -> DataFrame:
-    """Per-key row counts + share of total: the measurement step before
-    choosing salting targets."""
-    counts = df.groupBy(key).agg(F.count("*").cast("long").alias("n_rows"))
-    total = counts.agg(F.sum("n_rows")).collect()[0][0] or 1
-    return (
-        counts.withColumn("share", F.round(F.col("n_rows") / F.lit(float(total)), 6))
-        .orderBy(F.desc("n_rows"), F.asc(key))
-        .limit(top)
-    )

@@ -18,6 +18,25 @@ from pyspark.sql import SparkSession
 # executor memory even at 100x content size.
 _ARROW_BATCH = "10000"
 
+# default driver heap: this share of the machine's RAM, capped at 48g.
+# A heap above physical memory lets the JVM grow until the OS kills it.
+_HEAP_FRACTION = 0.5
+_HEAP_CAP_MB = 48 * 1024
+
+
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` sized from MemTotal; the cap when
+    MemTotal is unreadable (non-Linux)."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024  # kB
+                    return f"{min(int(total_mb * _HEAP_FRACTION), _HEAP_CAP_MB)}m"
+    except OSError:
+        pass
+    return f"{_HEAP_CAP_MB}m"
+
 
 def get_spark(
     master: str | None = None,
@@ -72,9 +91,12 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SLING_SPARK_UI", "false"))
         # local mode: driver heap IS the executor heap; 32 concurrent
         # tasks caching token-array columns thrash an 8g heap (measured
-        # 2x wall-clock regression), so default high and let the OS lazily
-        # commit. Override via SLING_SPARK_DRIVER_MEM on small machines.
-        .config("spark.driver.memory", os.environ.get("SLING_SPARK_DRIVER_MEM", "48g"))
+        # 2x wall-clock regression), so default high — but from the
+        # machine, never above its RAM. Override: SLING_SPARK_DRIVER_MEM.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SLING_SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,10 +1,8 @@
-"""Tests for the wider operator inventory: workflow facade, partition
-ops, KB aggregations, annotators, biaffine scorer, dates."""
+"""Tests for the wider operator inventory: partition ops, KB
+aggregations, annotators, biaffine scorer, dates."""
 
 from __future__ import annotations
 
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from sling_spark.functions.dates import (
@@ -82,7 +80,6 @@ def test_partition_ops(spark):
         corpus_split,
         discard,
         keep_only,
-        skew_report,
     )
 
     df = spark.createDataFrame([(i, f"k{i % 3}") for i in range(30)], "id long, key string")
@@ -92,71 +89,6 @@ def test_partition_ops(spark):
     split = corpus_split(df, "id", ratio=3)
     counts = dict(split.groupBy("split").count().collect())
     assert set(counts) <= {"train", "eval"} and sum(counts.values()) == 30
-    top = skew_report(df, "key", top=1).collect()[0]
-    assert top["n_rows"] == 10 and abs(top["share"] - 10 / 30) < 1e-6
-
-
-def test_workflow_facade(spark, tmp_path):
-    from sling_spark import workflow as wf
-
-    df = spark.createDataFrame([(1, "a"), (2, "b"), (2, "c")], "k long, v string")
-    out = str(tmp_path / "wf_out")
-    wf.write(wf.filter_rows(df, F.col("k") > 0), out, shards=2)
-    back = wf.read(spark, out)
-    assert back.count() == 3
-
-    def reducer(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame([{"k": int(pdf["k"].iloc[0]), "vs": "".join(sorted(pdf["v"]))}])
-
-    red = wf.reduce_groups(back, "k", reducer, "k long, vs string")
-    got = {r["k"]: r["vs"] for r in red.collect()}
-    assert got == {1: "a", 2: "bc"}
-    merged = wf.collect(df, df)
-    assert merged.count() == 6
-
-
-def test_workflow_sorter_pipe_and_sinks(spark, capsys):
-    from sling_spark import workflow as wf
-
-    df = spark.createDataFrame(
-        [(k, i) for k in ("a", "b", "c") for i in (3, 1, 2)],
-        "k string, serial long",
-    )
-    # identity relays unchanged (identity.cc)
-    assert wf.identity(df) is df
-
-    # sorter: equal keys co-located in one shard, rows leave each shard
-    # in (key, serial) order — collect() preserves within-partition order
-    rows = (
-        wf.sort_shards(df, "k", order="serial", shards=2)
-        .withColumn("pid", F.spark_partition_id())
-        .collect()
-    )
-    by_pid: dict[int, list] = {}
-    for r in rows:
-        by_pid.setdefault(r["pid"], []).append((r["k"], r["serial"]))
-    key_homes = {}
-    for pid, seq in by_pid.items():
-        assert seq == sorted(seq), f"shard {pid} not in (key, serial) order"
-        for k, _ in seq:
-            assert key_homes.setdefault(k, pid) == pid, f"key {k} split across shards"
-
-    # null sink executes the plan and discards (noop format)
-    wf.null_sink(df)
-
-    # printer logs bounded rows and reports how many
-    assert wf.printer_sink(df, limit=4) == 4
-    assert "[printer]" in capsys.readouterr().out
-
-    # pipe-reader: one task per command, line-per-message, loud failure
-    lines = wf.pipe_read(spark, ["printf 'x\\ny\\n'", "seq 1 5"]).collect()
-    got: dict[str, list[str]] = {}
-    for r in lines:
-        got.setdefault(r["command"], []).append(r["line"])
-    assert got["printf 'x\\ny\\n'"] == ["x", "y"]
-    assert sorted(got["seq 1 5"], key=int) == ["1", "2", "3", "4", "5"]
-    with pytest.raises(Exception, match="exit"):
-        wf.pipe_read(spark, "exit 3").collect()
 
 
 def test_kb_aggregates(spark):

@@ -4,10 +4,10 @@ from __future__ import annotations
 
 import pytest
 
-from sling_spark.kg.assets import build_assets, seed_dataframes
+from sling_spark.kg.assets import build_asset_store, load_assets, seed_dataframes
 from sling_spark.kg.documents import build_documents, idf_table
 from sling_spark.kg.mentions import annotate, mentions_of, relations_of
-from sling_spark.kg.relations import extract_relations, facts_df
+from sling_spark.kg.relations import facts_df
 from sling_spark.kg.xref import build_clusters
 from sling_spark.oracle import kg_oracle
 from sling_spark.sources.corpus import corpus_df
@@ -40,22 +40,20 @@ def oracle():
 
 
 @pytest.fixture(scope="module")
-def stages(spark):
+def stages(spark, tmp_path_factory):
     seed = seed_dataframes(spark)
     documents = build_documents(corpus_df(spark, N_FILES, partitions=4)).persist()
-    assets_bc, pt_df = build_assets(spark, documents, seed)
+    store_dir = str(tmp_path_factory.mktemp("assets"))
+    assets_bc, pt_df = build_asset_store(spark, documents, store_dir, seed)
     annotations = annotate(documents, assets_bc).persist()
-    mentions = mentions_of(annotations)
-    relations = relations_of(annotations)
-    relations_join = extract_relations(mentions, facts_df(seed["items"]))
     return {
         "seed": seed,
         "documents": documents,
         "pt_df": pt_df,
-        "assets": assets_bc.value,
-        "mentions": mentions,
-        "relations": relations,
-        "relations_join": relations_join,
+        "assets_bc": assets_bc,
+        "assets": load_assets(assets_bc.value),
+        "mentions": mentions_of(annotations),
+        "relations": relations_of(annotations),
     }
 
 
@@ -104,18 +102,6 @@ def test_relations_match_oracle(stages, oracle):
     want = [tuple(t[c] for c in cols) for t in oracle["relations"]]
     assert sorted(got) == sorted(want)
     assert len(got) > 20
-
-
-def test_join_based_relations_equal_fused(stages):
-    """The declarative plan (mentions x broadcast(facts) x mentions +
-    per-sentence solve) and the fused annotator emit identical rows."""
-    cols = ["repo", "path", "commit", "sentence", "subj", "pred", "obj",
-            "begin", "end"]
-    fused = sorted(tuple(r[c] for c in cols) for r in stages["relations"].collect())
-    joined = sorted(
-        tuple(r[c] for c in cols) for r in stages["relations_join"].collect()
-    )
-    assert fused == joined
 
 
 def test_facts_closure_matches_lookup(spark, stages):
@@ -291,22 +277,13 @@ def test_inverse_property_reconciliation(spark):
 def test_asset_store_scale_path(spark, tmp_path):
     """The 100x-scale asset path (SLING repository memory-map analog):
     build_asset_store writes Parquet + broadcasts only a handle — NO
-    driver collect anywhere — and workers lazily load per process.
-    Results are identical to broadcast mode; asset dicts derived from
-    the KB DataFrames match the fixture literals."""
+    driver collect anywhere — and workers lazily load per process. Asset
+    dicts derived from the KB DataFrames match the fixture literals."""
     import pickle
 
     import pyspark.sql as psql
 
-    from sling_spark.kg.assets import (
-        AssetStore,
-        build_asset_store,
-        build_assets,
-        gender_from_items,
-        links_from_items,
-        load_assets,
-        seed_dataframes,
-    )
+    from sling_spark.kg.assets import AssetStore, gender_from_items, links_from_items
     from sling_spark.kg.documents import doc_stats, latest_with_sha
     from sling_spark.kg.mentions import detect_mentions
     from sling_spark.sources import kb
@@ -333,8 +310,7 @@ def test_asset_store_scale_path(spark, tmp_path):
         r["id"]: r["gender"] for r in gender_from_items(seed["items"]).collect()
     } == kb.gender_lookup()
 
-    # --- store mode: zero driver-side collect ---------------------------
-    bc1, _ = build_assets(spark, stats, seed)
+    # --- zero driver-side collect ---------------------------------------
     store_dir = str(tmp_path / "assets")
     orig_collect = psql.DataFrame.collect
 
@@ -349,12 +325,6 @@ def test_asset_store_scale_path(spark, tmp_path):
     # the broadcast payload is a tiny handle, not the tables
     assert isinstance(bc2.value, AssetStore)
     assert len(pickle.dumps(bc2.value)) < 1000
-
-    # --- store-mode annotation == broadcast-mode annotation ------------
-    key = ["repo", "path", "begin", "end", "entity", "score"]
-    m1 = sorted(tuple(r[k] for k in key) for r in detect_mentions(docs, bc1).collect())
-    m2 = sorted(tuple(r[k] for k in key) for r in detect_mentions(docs, bc2).collect())
-    assert m1 == m2 and len(m1) > 0
 
     # --- worker-side loader handles a table far beyond fixture scale ---
     from sling_spark.functions.tokenize import phrase_fingerprint, phrase_form
@@ -423,44 +393,24 @@ def test_asset_store_scale_path(spark, tmp_path):
     stats.unpersist()
 
 
-def test_asset_store_future_overlap_equivalence(spark, tmp_path):
-    """asset_store_future (corpus-independent writes launched at
-    pipeline start, overlapping the corpus stages on background
-    submitter threads) must leave the store byte-for-byte equivalent in
-    content to the serial build_asset_store path: same table names, same
-    rows, and workers load identical assets from either."""
-    from sling_spark.kg.assets import (
-        asset_store_future,
-        build_asset_store,
-        load_assets,
-        seed_dataframes,
-    )
-    from sling_spark.kg.documents import doc_stats, latest_with_sha
-    from sling_spark.sources.corpus import corpus_df
+def test_asset_store_location():
+    """run_pipeline's store directory: the explicit dir, else beside the
+    checkpoints, else a temp dir — which only a local master can use."""
+    import os
+    from types import SimpleNamespace
 
-    seed = seed_dataframes(spark)
-    dir_fut = str(tmp_path / "fut")
-    fut = asset_store_future(spark, seed, dir_fut)
-    docs = latest_with_sha(corpus_df(spark, 30, partitions=4)).persist()
-    stats = doc_stats(docs).persist()
-    stats.count()
-    bc_fut, pt_fut = build_asset_store(
-        spark, stats, dir_fut, seed, store_future=fut
-    )
-    dir_ser = str(tmp_path / "ser")
-    bc_ser, pt_ser = build_asset_store(spark, stats, dir_ser, seed)
+    from sling_spark.kg.assets import store_location
 
-    a_fut = load_assets(bc_fut.value)
-    a_ser = load_assets(bc_ser.value)
-    assert a_fut.phrase_table == a_ser.phrase_table
-    assert a_fut.idf == a_ser.idf
-    assert a_fut.popularity == a_ser.popularity
-    assert a_fut.links == a_ser.links
-    assert a_fut.statements == a_ser.statements
-    assert a_fut.gender == a_ser.gender
-    assert sorted(map(repr, pt_fut.collect())) == sorted(map(repr, pt_ser.collect()))
-    docs.unpersist()
-    stats.unpersist()
+    def session(master):
+        return SimpleNamespace(sparkContext=SimpleNamespace(master=master))
+
+    cluster = session("spark://head:7077")
+    assert store_location(cluster, "s3://b/assets", "s3://b/ckpt") == "s3://b/assets"
+    assert store_location(cluster, None, "hdfs:///ckpt/") == "hdfs:///ckpt/assets"
+    with pytest.raises(ValueError, match="asset_store_dir.*checkpoint_dir"):
+        store_location(cluster)
+    for master in ("local", "local[4]", "local[4,2]"):
+        assert os.path.isdir(store_location(session(master)))
 
 
 def test_alias_selector_thresholds(spark):
@@ -630,7 +580,6 @@ def test_phrase_structure_annotator(spark, stages):
     never a sub-mention, and sub-mentions resolving to the parent are
     dropped."""
     from sling_spark.functions.tokenize import tokenize
-    from sling_spark.kg.assets import build_assets, seed_dataframes
     from sling_spark.kg.phrase_structure import (
         analyze_phrase,
         phrase_structure,
@@ -652,8 +601,7 @@ def test_phrase_structure_annotator(spark, stages):
     assert ("Q13", "P1") in {(s, p) for _b, _e, s, p in analyze_phrase(wjs, "Q35", pt, st)}
 
     # spark path over the pipeline's own mentions
-    assets_bc, _ = build_assets(spark, stages["documents"], stages["seed"])
-    sub_rows = phrase_structure(stages["mentions"], assets_bc).collect()
+    sub_rows = phrase_structure(stages["mentions"], stages["assets_bc"]).collect()
     rows = {(r["entity"], r["sub_entity"], r["pid"]) for r in sub_rows}
     assert ("Q1", "Q50", "P3") in rows
     # offsets: every sub-span sits strictly inside its parent span

@@ -911,20 +911,6 @@ def test_apply_cdc_seq_col_orders_ops_within_batch(spark):
     assert ("k1", 10) in loose and ("k2", 20) in loose
 
 
-def test_salt_heavy_keys_duplicate_heavy_rows_no_fanout(spark):
-    """A heavy table listing the same hot key twice (two concatenated
-    skew reports) must not duplicate the matching data rows."""
-    from sling_spark.operators.partition import salt_heavy_keys
-
-    df = spark.createDataFrame(
-        [("hot", i) for i in range(8)] + [("cold", 0)], "k string, v int"
-    )
-    heavy = spark.createDataFrame([("hot",), ("hot",)], "k string")
-    out = salt_heavy_keys(df, "k", heavy, salt_buckets=4)
-    assert out.count() == 9
-    assert out.filter("k = 'hot'").count() == 8
-
-
 def test_read_text_map_quotes_and_tabless_lines(spark, tmp_path):
     """TSV values are raw text: a leading double quote is data (CSV
     quote handling off) and a tab-less line yields (key, NULL) instead

@@ -48,11 +48,11 @@ def test_doc_scan_pruning(spark):
     assert_pruned_schema(df, "documents", 2)
 
 
-def test_mentions_stage_is_narrow(spark):
+def test_mentions_stage_is_narrow(spark, tmp_path):
     """Mention detection adds NO shuffle on the corpus side: the plan
     between the documents scan and the mentions output must be
-    exchange-free (broadcast assets, mapInPandas)."""
-    from sling_spark.kg.assets import build_assets, seed_dataframes
+    exchange-free (store-loaded assets, mapInPandas)."""
+    from sling_spark.kg.assets import build_asset_store, seed_dataframes
     from sling_spark.kg.documents import build_documents
     from sling_spark.kg.mentions import detect_mentions
     from sling_spark.sources.corpus import corpus_df
@@ -60,28 +60,13 @@ def test_mentions_stage_is_narrow(spark):
     seed = seed_dataframes(spark)
     docs = build_documents(corpus_df(spark, 30, partitions=2)).persist()
     docs.count()
-    assets_bc, _ = build_assets(spark, docs, seed)
+    assets_bc, _ = build_asset_store(spark, docs, str(tmp_path / "assets"), seed)
     mentions = detect_mentions(docs, assets_bc)
     plan = formatted_plan(mentions)
     # the persisted documents relation contains its own (expected)
     # shuffle; everything ABOVE the cache boundary must be exchange-free
     above_cache = plan.split("InMemoryRelation", 1)[0]
     assert "Exchange" not in above_cache, plan
-
-
-def test_relations_uses_broadcast_facts(spark):
-    from sling_spark.kg.assets import seed_dataframes
-    from sling_spark.kg.relations import extract_relations, facts_df
-
-    seed = seed_dataframes(spark)
-    mentions = spark.createDataFrame(
-        [("r", "p", "c", "s", 0, 0, 1, "x", 1, "Q1", 1.0, 1, False)],
-        "repo string, path string, commit string, content_sha string, "
-        "sentence int, begin int, end int, phrase string, fp long, "
-        "entity string, score double, form int, anaphora boolean",
-    )
-    rel = extract_relations(mentions, facts_df(seed["items"]))
-    assert_broadcast_join(rel)
 
 
 def test_exact_dedup_partial_agg(spark):

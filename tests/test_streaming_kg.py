@@ -15,7 +15,7 @@ def _triple_set(df):
 
 
 def test_streaming_increments_match_batch(spark, tmp_path):
-    from sling_spark.kg.assets import build_assets, seed_dataframes
+    from sling_spark.kg.assets import build_asset_store, seed_dataframes
     from sling_spark.kg.documents import build_documents, latest_versions
     from sling_spark.kg.mentions import annotate, relations_of
     from sling_spark.kg.relations import doc_triples
@@ -42,7 +42,7 @@ def test_streaming_increments_match_batch(spark, tmp_path):
     # assets built from the FULL corpus documents (the commons KB is a
     # batch asset; streaming only annotates)
     docs_full = build_documents(full)
-    assets_bc, _ = build_assets(spark, docs_full, seed)
+    assets_bc, _ = build_asset_store(spark, docs_full, str(tmp_path / "assets"), seed)
 
     # increment 1
     stream = stream_triples(
@@ -104,11 +104,11 @@ def test_upsert_and_cdc(spark):
 def test_streaming_with_asset_store(spark, tmp_path):
     """Structured Streaming annotation with the Parquet-backed
     AssetStore (no driver collect): the streamed triples equal the
-    broadcast-mode batch result — store mode composes with streaming."""
+    batch annotation of the same documents with the same store."""
     import pyspark.sql as psql
     from pyspark.sql import functions as F
 
-    from sling_spark.kg.assets import build_asset_store, build_assets, seed_dataframes
+    from sling_spark.kg.assets import build_asset_store, seed_dataframes
     from sling_spark.kg.documents import doc_stats, latest_with_sha
     from sling_spark.kg.mentions import annotate, relations_of
     from sling_spark.sources.corpus import corpus_df
@@ -146,10 +146,9 @@ def test_streaming_with_asset_store(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
     }
 
-    batch_bc, _ = build_assets(spark, stats, seed)
     batch = {
         (r["subj"], r["pred"], r["obj"])
-        for r in relations_of(annotate(docs, batch_bc))
+        for r in relations_of(annotate(docs, store_bc))
         .select(F.col("subj"), "pred", "obj").collect()
     }
     assert streamed == batch and len(streamed) > 0

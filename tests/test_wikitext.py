@@ -172,7 +172,7 @@ def test_extract_emphasis_and_intro():
     assert ("The Thing Project", "bold", True) in ems3
 
 
-def test_intro_alias_resolves(spark):
+def test_intro_alias_resolves(spark, tmp_path):
     """A bolded intro phrase becomes an alias row for the article's own
     QID (wikipedia_intro_alias_rows) and RESOLVES: merged into the
     alias table, a plain-text mention of the bolded name annotates to
@@ -214,7 +214,7 @@ def test_intro_alias_resolves(spark):
 
     # resolution: merge the intro alias into the seed alias table and
     # annotate a text mentioning the bolded name
-    from sling_spark.kg.assets import build_assets, seed_dataframes
+    from sling_spark.kg.assets import build_asset_store, seed_dataframes
     from sling_spark.kg.documents import doc_stats, latest_with_sha
     from sling_spark.kg.mentions import detect_mentions
 
@@ -225,7 +225,9 @@ def test_intro_alias_resolves(spark):
         "repo string, path string, commit string, lang string, content string",
     )
     docs = latest_with_sha(probe)
-    assets_bc, _ = build_assets(spark, doc_stats(docs), seed)
+    assets_bc, _ = build_asset_store(
+        spark, doc_stats(docs), str(tmp_path / "assets"), seed
+    )
     ents = {m["entity"] for m in detect_mentions(docs, assets_bc).collect()}
     assert "Q77" in ents
 

@@ -41,9 +41,10 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--asset-store", default=None,
-                    help="worker-visible dir: Parquet-backed annotator "
-                         "assets loaded lazily per worker (no driver "
-                         "collect) — for a KB that outgrows broadcast")
+                    help="worker-visible dir for the Parquet annotator "
+                         "assets each worker loads lazily (default: "
+                         "<checkpoint>/assets; without --checkpoint, a "
+                         "temp dir on a local master)")
     args = ap.parse_args()
 
     from sling_spark.kg.materialize import (
