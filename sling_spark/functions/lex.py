@@ -146,26 +146,3 @@ def render_lex(documents_raw, mentions):
             yield pd.DataFrame(data, columns=list(data))
 
     return joined.mapInPandas(render, schema=LEX_SCHEMA)
-
-
-_HTML_SEPARATORS = {0: "", 1: " ", 2: "  ", 3: "<p>"}
-
-
-def to_html(words: list[str], brks: list[int], spans: list[tuple[int, int, str]]) -> str:
-    """Render tokens + spans to the reference's simplified HTML
-    (ToHTML, lex.cc:296-368): `<a ref="Qid">phrase</a>` anchors, `<p>`
-    at paragraph breaks, same escape table as LEX."""
-    opens: dict[int, list[str]] = {}
-    closes: dict[int, int] = {}
-    for b, e, ref in sorted(spans, key=lambda s: (s[0], -s[1])):
-        opens.setdefault(b, []).append(ref)
-        closes[e - 1] = closes.get(e - 1, 0) + 1
-    out: list[str] = []
-    for i, (w, brk) in enumerate(zip(words, brks)):
-        if i > 0:
-            out.append(_HTML_SEPARATORS.get(brk, " "))
-        for ref in opens.get(i, ()):
-            out.append(f'<a ref="{ref}">' if ref else "<a>")
-        out.append(_escape(w))
-        out.append("</a>" * closes.get(i, 0))
-    return "".join(out)

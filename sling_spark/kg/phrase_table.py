@@ -237,23 +237,3 @@ def build_phrase_table(selected: DataFrame) -> DataFrame:
             ).alias("entries"),
         )
     )
-
-
-def build_name_table(selected: DataFrame) -> DataFrame:
-    """Sorted (normalized name → entities) table for prefix search —
-    the name-table-builder analog (sling/nlp/kb/name-table-builder.cc:
-    34-240). Serving-side artifact: ORDER BY makes the parquet row
-    groups range-prunable on the name prefix."""
-    norm = F.lower(F.col("alias"))
-    return (
-        selected.select(
-            norm.alias("name"),
-            F.struct(
-                F.col("entity"), F.col("count"), F.col("form")
-            ).alias("entry"),
-        )
-        .groupBy("name")
-        .agg(F.array_sort(F.collect_list("entry")).alias("entries"))
-        .orderBy("name")
-    )
-

@@ -201,13 +201,6 @@ def test_render_lex_over_pipeline(spark):
     assert total_spans == n_mentions
 
 
-def test_to_html_anchors():
-    from sling_spark.functions.lex import to_html
-
-    h = to_html(["Apache", "Spark", "&", "x"], [0, 1, 1, 3], [(0, 2, "Q1")])
-    assert h == '<a ref="Q1">Apache Spark</a> &#38;<p>x'
-
-
 def test_subword_tokenizer():
     """Greedy longest-prefix wordpiece (subword-tokenizer.cc:54-106):
     whole-word fast path, leading/trailing (##) lexicons, punctuation

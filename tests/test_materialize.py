@@ -1,5 +1,5 @@
 """Materialization: partitioned triple table, extraction metrics,
-name table."""
+RDF export."""
 
 from __future__ import annotations
 
@@ -61,19 +61,6 @@ def test_anchor_alias_bootstrap(spark):
     merged = merged_alias_table(seed["aliases"], anchors)
     pt2 = build_phrase_table(select_aliases(merged))
     assert pt2.count() > 0
-
-
-def test_name_table(spark):
-    from sling_spark.kg.assets import seed_dataframes
-    from sling_spark.kg.phrase_table import build_name_table, select_aliases
-
-    seed = seed_dataframes(spark)
-    nt = build_name_table(select_aliases(seed["aliases"]))
-    rows = nt.collect()
-    names = [r["name"] for r in rows]
-    assert names == sorted(names)  # prefix-searchable ordering
-    by_name = {r["name"]: r["entries"] for r in rows}
-    assert any(e["entity"] == "Q1" for e in by_name["spark"])
 
 
 def test_ntriples_export(spark, tmp_path):
