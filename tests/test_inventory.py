@@ -1,5 +1,5 @@
-"""Tests for the wider operator inventory: partition ops, KB
-aggregations, annotators, biaffine scorer, dates."""
+"""Tests for the wider operator inventory: KB aggregations, biaffine
+scorer, BIO decoder, transition system, dates."""
 
 from __future__ import annotations
 
@@ -75,22 +75,6 @@ def test_parse_date_textual_forms():
     assert month_of_word("may") == 5  # full names stay case-insensitive
 
 
-def test_partition_ops(spark):
-    from sling_spark.operators.partition import (
-        corpus_split,
-        discard,
-        keep_only,
-    )
-
-    df = spark.createDataFrame([(i, f"k{i % 3}") for i in range(30)], "id long, key string")
-    bl = spark.createDataFrame([("k0",)], "key string")
-    assert discard(df, bl, "key").count() == 20
-    assert keep_only(df, bl, "key").count() == 10
-    split = corpus_split(df, "id", ratio=3)
-    counts = dict(split.groupBy("split").count().collect())
-    assert set(counts) <= {"train", "eval"} and sum(counts.values()) == 30
-
-
 def test_kb_aggregates(spark):
     from sling_spark.kg.aggregates import (
         best_per_group,
@@ -123,37 +107,6 @@ def test_kb_aggregates(spark):
         [F.desc("s")],
     )
     assert {(r["g"], r["s"]) for r in best.collect()} == {(1, 9.0), (2, 1.0)}
-
-
-def test_annotator_chain(spark):
-    from sling_spark.kg.annotators import prune_statements, run_chain, split_by_kind
-    from sling_spark.kg.assets import seed_dataframes
-
-    seed = seed_dataframes(spark)
-    mentions = spark.createDataFrame(
-        [("Q1", 5.0), ("Q3", 0.0)], "entity string, score double"
-    )
-    out = run_chain(
-        mentions,
-        [
-            ("types", {"items": seed["items"]}),
-            ("mention-names", {"items": seed["items"]}),
-            ("prune-low-score", {}),
-        ],
-    )
-    rows = out.collect()
-    assert len(rows) == 1 and rows[0]["entity_name"] == "Apache Spark"
-    assert rows[0]["types"] == ["framework"]
-
-    pruned = prune_statements(seed["items"], {"P4"})
-    assert (
-        pruned.select(F.explode("statements").alias("st"))
-        .filter(F.col("st.pid") == "P4")
-        .count()
-        == 0
-    )
-    parts = split_by_kind(mentions, "entity", ["Q1", "Q3"])
-    assert parts["Q1"].count() == 1
 
 
 def test_biaffine_batched_scoring(spark):
@@ -232,25 +185,6 @@ def test_bio_decoder_constrained_decode(spark):
                      round(score, 6))
                 )
     assert got == expected and len(got) > 0
-
-
-def test_document_prologue(spark):
-    """filters.cc DocumentPrologueAnnotator: content truncated at the
-    first heading; heading-less documents pass through unchanged."""
-    from sling_spark.kg.annotators import ANNOTATORS
-
-    df = spark.createDataFrame(
-        [
-            ("a.md", "intro text\nmore intro\n## Section One\nbody\n## Two\nrest"),
-            ("b.md", "no headings at all\njust text"),
-            ("c.md", "#!shebang-ish\n### Deep heading\ntail"),
-        ],
-        "path string, content string",
-    )
-    out = {r["path"]: r["content"] for r in ANNOTATORS["document-prologue"](df).collect()}
-    assert out["a.md"] == "intro text\nmore intro"
-    assert out["b.md"] == "no headings at all\njust text"
-    assert out["c.md"] == "#!shebang-ish"
 
 
 def test_gold_transition_generator():

@@ -546,33 +546,6 @@ def test_xref_conflict_reporting(spark):
     assert all(m[:2] == ("Q1", "Q2") for m in ca)
 
 
-def test_span_taxonomy_flags(spark):
-    """SpanTaxonomy type classification (mentions.h:173-205): flags from
-    direct types plus P279-inherited types; literals flag 0."""
-    from sling_spark.kg.annotators import (
-        SPAN_CLASS,
-        SPAN_PERSON,
-        SPAN_SOFTWARE,
-        entity_flags,
-        span_taxonomy,
-    )
-    from sling_spark.kg.assets import seed_dataframes
-
-    seed = seed_dataframes(spark)
-    ef = {r["id"]: r["flags"] for r in entity_flags(seed["items"]).collect()}
-    assert ef["Q80"] == SPAN_PERSON
-    assert ef["Q1"] == SPAN_SOFTWARE
-    # Q6 inherits CLASS through P279 -> Q71 (class) and Q72 (class)
-    assert ef["Q6"] & SPAN_SOFTWARE and ef["Q6"] & SPAN_CLASS
-
-    m = spark.createDataFrame(
-        [("Q80", "Ada Lovelace"), ("Q1", "Spark"), ("2014-02-27", "2014-02-27")],
-        "entity string, phrase string",
-    )
-    got = {r["entity"]: r["flags"] for r in span_taxonomy(m, seed["items"]).collect()}
-    assert got == {"Q80": SPAN_PERSON, "Q1": SPAN_SOFTWARE, "2014-02-27": 0}
-
-
 def test_phrase_structure_annotator(spark, stages):
     """Phrase-structure analog (phrases.cc:37-160): 'Apache Spark'
     resolved to Q1 gains the sub-mention 'Apache' -> Q50 (the

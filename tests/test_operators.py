@@ -571,12 +571,8 @@ def test_external_corpus_table_end_to_end(spark, tmp_path):
     assert bad_rows == 0
 
 
-def test_inverted_index_and_rekey_and_clear_refs(spark):
-    from pyspark.sql import functions as F
-
+def test_inverted_index(spark):
     from sling_spark.kg.aggregates import inverted_index
-    from sling_spark.kg.annotators import clear_references
-    from sling_spark.operators.partition import rekey
 
     m = spark.createDataFrame(
         [("Q1", "r", "a"), ("Q1", "r", "b"), ("Q1", "r", "a"), ("Q2", "r", "a")],
@@ -584,12 +580,6 @@ def test_inverted_index_and_rekey_and_clear_refs(spark):
     )
     got = {r["entity"]: r["postings"] for r in inverted_index(m).collect()}
     assert got == {"Q1": ["r/a", "r/b"], "Q2": ["r/a"]}
-
-    rk = rekey(m.withColumn("key", F.lit("x")), F.concat_ws("|", "entity", "path"))
-    assert {r["key"] for r in rk.collect()} == {"Q1|a", "Q1|b", "Q2|a"}
-
-    cc = clear_references(m.withColumn("__aux", F.lit(1)))
-    assert "__aux" not in cc.columns and set(cc.columns) == set(m.columns)
 
 
 def test_simhash_near_dup_pairs(spark):
