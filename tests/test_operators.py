@@ -1,9 +1,8 @@
-"""Tests for training-data operators, streaming parity, multimodal
-plumbing, and the driver entry contract."""
+"""Tests for training-data operators, streaming parity and the driver
+entry contract."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -238,31 +237,6 @@ def test_streaming_tumbling_matches_batch(spark, tmp_path):
     )
     want = {(r["ws"], r["event_type"]): (r["n"], r["s"]) for r in batch.collect()}
     assert got == want and len(got) > 10
-
-
-def test_multimodal_plumbing(spark):
-    from sling_spark.multimodal.binary_ops import byte_features, decode_images
-
-    rows = [
-        (1, "image", bytes(range(256)), (4, 4, None, None)),
-        (2, "audio", b"\x00" * 64, (None, None, 16000, None)),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,n_frames:int>",
-    )
-    feats = {r["media_id"]: r for r in byte_features(media).collect()}
-    assert feats[1]["n_bytes"] == 256 and feats[1]["entropy"] == 4.0
-    assert feats[2]["entropy"] == 0.0
-    # strict mode surfaces the stubbed codec
-    with pytest.raises(Exception, match="codec"):
-        decode_images(media, decode_mode="strict").collect()
-    decoded = decode_images(media, decode_mode="fake", target=(4, 4)).collect()
-    assert len(decoded) == 1 and len(decoded[0]["pixels"]) == 16
-    # deterministic across runs
-    again = decode_images(media, decode_mode="fake", target=(4, 4)).collect()
-    assert decoded[0]["pixels"] == again[0]["pixels"]
 
 
 def test_lang_id_accuracy(spark):
@@ -933,20 +907,6 @@ def test_write_triples_bucket_directory_pruning(spark, tmp_path):
     pruned = back.filter(F.col("subj_bucket") == bucket)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "subj_bucket" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_byte_features_null_payload(spark):
-    """A NULL payload (failed upstream fetch) scores as empty bytes
-    instead of crashing the task on bytes(None)."""
-    from sling_spark.multimodal.binary_ops import byte_features
-
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(b"\x00\x01\xff")), (2, "image", None)],
-        "media_id long, kind string, payload binary",
-    )
-    rows = {r["media_id"]: r for r in byte_features(media).collect()}
-    assert rows[1]["n_bytes"] == 3
-    assert rows[2]["n_bytes"] == 0
 
 
 def test_evaluate_aspects_key_union():
