@@ -1,7 +1,11 @@
 """Tests for the wider operator inventory: KB aggregations, biaffine
-scorer, BIO decoder, transition system, dates."""
+scorer, BIO decoder, transition system, dates, and the guard that every
+library module is reachable from an entry point."""
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 from pyspark.sql import functions as F
 
@@ -310,3 +314,58 @@ def test_cascade_encodings():
             assert knolex[i - 1][:2] == ("CASCADE", 2)
         elif a[0] == "REFER":
             assert knolex[i - 1][0] != "CASCADE"
+
+
+# Modules no entry point imports yet, kept pending a keep-or-delete
+# decision. Anything else unreached is dead code: delete it or wire it in.
+PENDING_UNREACHED = {
+    "sling_spark.functions.subword",
+    "sling_spark.kg.anchor_aliases",
+    "sling_spark.plans",
+    "sling_spark.sources.wikitext",
+    "sling_spark.streaming.events",
+}
+
+
+def _imported_names(path, module):
+    """Dotted names of every import in ``path``, function bodies included."""
+    package = module if path.name == "__init__.py" else module.rpartition(".")[0]
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            yield from (alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                anchor = package.rsplit(".", node.level - 1)[0]
+                base = f"{anchor}.{base}" if base else anchor
+            yield base
+            yield from (f"{base}.{alias.name}" for alias in node.names)
+
+
+def test_every_module_is_reachable_from_an_entry_point():
+    """Every sling_spark module is imported, directly or transitively, by
+    the pipeline, the contract, a tool or a benchmark."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+
+    def name(path):
+        parts = path.relative_to(root).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    modules = {name(p): p for p in (root / "sling_spark").rglob("*.py")}
+    todo = [root / "sling_spark/kg/pipeline.py", root / "sling_spark/contract.py",
+            root / "bench.py", root / "bench_extra.py", root / "__spark_entry__.py",
+            *(root / "tools").glob("*.py"),
+            *(p for p in (root / "kgbench").glob("*.py") if not p.name.startswith("test_"))]
+    reached = {name(p) for p in todo}
+    while todo:
+        path = todo.pop()
+        for imported in _imported_names(path, name(path)):
+            parts = imported.split(".")
+            for prefix in (".".join(parts[:i]) for i in range(1, len(parts) + 1)):
+                if prefix in modules and prefix not in reached:
+                    reached.add(prefix)
+                    todo.append(modules[prefix])
+    unreached = sorted(set(modules) - reached - PENDING_UNREACHED)
+    assert not unreached, f"no entry point imports {unreached}"
+    stale = sorted(PENDING_UNREACHED - (set(modules) - reached))
+    assert not stale, f"reached or deleted, drop from PENDING_UNREACHED: {stale}"
