@@ -93,6 +93,10 @@ def _minhash_perm(i: int):
 
 
 def q_tpch_q1(spark, sf_dir):
+    """TPC-H Q1. Spark and DuckDB add the float sums in different orders,
+    so at sf0.1 a rounded sum can differ from the oracle in its last ulp;
+    the scale factors the contract is gated at do not show it. Gating
+    sf0.1 would need compensated summation or a tolerance-aware hash."""
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
