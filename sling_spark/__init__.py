@@ -28,10 +28,7 @@ Package layout
                   tables.
 - ``streaming/``  Structured Streaming equivalents of the incremental
                   paths.
-- ``multimodal/`` binary-column (image/audio) plumbing; codecs stubbed.
 - ``plans/``      plan-inspection helpers (explain/pushdown assertions).
-- ``serving.py``  KB query/serving views (item fetch, phrase lookup,
-                  name prefix search).
 """
 
 __version__ = "0.1.0"
