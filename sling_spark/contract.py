@@ -1106,8 +1106,10 @@ FROM scrubbed
 
 def q_doc_dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERING: the simhash pair list closed under
-    transitive connectivity (large-star/small-star connected
-    components, the same O(log n) machinery as identifier xref) →
+    transitive connectivity (the same size-switched components as
+    identifier xref: a driver union-find at or below
+    ``kg.xref.DRIVER_EDGE_LIMIT`` pairs — every sf this contract runs —
+    large-star/small-star rounds above it) →
     (doc_id, keep_id = min id in component, cluster_size) — the
     keep-list stage every corpus-dedup pipeline ends with (A~B and B~C
     must not both survive with B deleted). Oracle: recursive-CTE

@@ -7,23 +7,31 @@ conflict is reported, not merged); the cluster's canonical id is its
 highest-priority member (xref.h:109-119), and ids in caseless namespaces
 are lowercased before matching.
 
-Spark-first execution (SURVEY.md §4 custom-work item #1):
+Spark-first execution (SURVEY.md §4 custom-work item #1). One size
+switch, ``DRIVER_EDGE_LIMIT``, picks the path for every connected-
+components caller here and in ``operators.dedup.dedup_clusters``:
 
-1. **Large-star / small-star connected components** over the symmetric
-   edge list (Kiveris et al., "Connected Components in MapReduce and
-   Beyond") — alternating DataFrame join/agg rounds that converge in
-   O(log n) rounds on ANY topology (a 10^6-edge chain is covered by
-   test); lineage is truncated with localCheckpoint so plans don't grow.
-2. **Constraint repair**: components that captured >= 2 main ids are
-   re-solved per component in applyInPandas with a sequential union-find
-   that refuses main+main unions, edges processed in a deterministic
-   global order — identical to the pure-Python oracle's order, so
-   results match exactly. Union-find on disjoint components commutes, so
-   per-component re-solve == global sequential solve.
+1. **At or below the limit: one driver union-find.** A single bounded
+   fetch (``small_edge_list``) both counts and collects the edge set;
+   xref tables and near-dup pair graphs are dimension-sized, and a dozen
+   iterative Spark jobs for 10^4 edges is pure scheduling overhead. This
+   is the reference's own shape (xref-builder.cc runs one in-memory
+   union-find).
+2. **Above it: large-star / small-star connected components** over the
+   symmetric edge list (Kiveris et al., "Connected Components in
+   MapReduce and Beyond") — alternating DataFrame join/agg rounds that
+   converge in O(log n) rounds on ANY topology (a 10^6-edge chain is
+   covered by test); lineage is truncated with localCheckpoint so plans
+   don't grow. Components that captured >= 2 main ids are then
+   re-solved per component in applyInPandas with a sequential
+   union-find that refuses main+main unions, edges processed in a
+   deterministic global order — identical to the pure-Python oracle's
+   order, so results match exactly. Union-find on disjoint components
+   commutes, so per-component re-solve == global sequential solve.
 
 All id string manipulation is native Column expressions (JVM-side, inside
-whole-stage codegen) — the only Python is the per-conflicted-component
-union-find, which touches a vanishing fraction of rows.
+whole-stage codegen); Python runs only the union-finds — over the whole
+edge list below the limit, per conflicted component above it.
 """
 
 from __future__ import annotations
@@ -35,6 +43,11 @@ from pyspark.sql import functions as F
 from ..sources.kb import CASELESS_NAMESPACES, NAMESPACE_PRIORITY
 
 CLUSTERS_SCHEMA = "member_id string, canonical_id string"
+
+# Edge sets up to this size run connected components as one union-find on
+# the driver, above it as distributed star rounds. 200k string edges are
+# tens of MB of driver memory. Tests force a path by patching this value.
+DRIVER_EDGE_LIMIT = 200_000
 
 # ---------------------------------------------------------------------------
 # scalar semantics (pure Python twins used by the oracle + tiny repair UDF)
@@ -155,7 +168,12 @@ def connected_components(
     edges: DataFrame, max_iter: int = 25, loop_partitions: int = 8
 ) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al.): (id,
-    component), component = lexicographic min reachable id. Converges in
+    component), component = lexicographic min reachable id, for every
+    endpoint of an edge — an id whose only edge is a self-loop is its own
+    component. This is the distributed side of the ``DRIVER_EDGE_LIMIT``
+    switch: ``build_clusters`` and ``dedup_clusters`` call it only for
+    edge sets above the limit (``contract.q_kg_xref_components`` calls it
+    directly, at any size). Converges in
     O(log n) rounds on ANY graph — the round-2 min-label version was
     O(diameter), which silently returns NON-converged labels on a long
     chain within any fixed iteration budget. Convergence is checked
@@ -176,8 +194,14 @@ def connected_components(
     graphs). Sets ``connected_components.last_rounds`` for tests.
 
     At the fixpoint the edge set is exactly the star forest
-    (member → component-min), so labels are read off the edges."""
+    (member → component-min), so labels are read off the edges. The star
+    rounds drop self-loops, so each self-loop id is added back as its own
+    label candidate and the min per id is kept: an id with other edges
+    has a label no larger than itself, so the loop never wins there."""
     e = edges.select("a", "b").coalesce(loop_partitions).localCheckpoint()
+    loops = e.filter(F.col("a") == F.col("b")).select(
+        F.col("a").alias("id"), F.col("a").alias("component")
+    )
     prev_sig = None
     rounds = 0
     for it in range(max_iter):
@@ -206,8 +230,43 @@ def connected_components(
         .union(
             e.select(F.col("b").alias("id"), F.col("b").alias("component"))
         )
-        .distinct()
+        .union(loops)
+        .groupBy("id")
+        .agg(F.min("component").alias("component"))
     )
+
+
+def small_edge_list(edges: DataFrame) -> list[tuple] | None:
+    """The size switch of every connected-components caller: one bounded
+    fetch that both counts and collects the (a, b) edge set. Returns the
+    edges as tuples when there are at most ``DRIVER_EDGE_LIMIT`` of them
+    (the caller runs a driver union-find), else None (the caller runs
+    ``connected_components``)."""
+    rows = edges.select("a", "b").limit(DRIVER_EDGE_LIMIT + 1).collect()
+    if len(rows) > DRIVER_EDGE_LIMIT:
+        return None
+    return [tuple(r) for r in rows]
+
+
+def min_label_components(edge_rows) -> dict:
+    """Driver union-find over (a, b) pairs: every endpoint → the smallest
+    id of its component, the labels ``connected_components`` computes.
+    The smaller root always wins a union, so each root is its
+    component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 CONFLICTS_SCHEMA = (
@@ -266,14 +325,6 @@ def _sequential_union(
     return out, conflicts
 
 
-def _clusters_driver(edge_rows: list[tuple[str, str]]) -> list[dict]:
-    """Global sequential union-find with main+main refusals over a
-    collected edge list — exact xref.cc semantics, used when the edge
-    set is dimension-sized (it IS the oracle algorithm; the distributed
-    CC + per-component repair path is proven equivalent by tests)."""
-    return _sequential_union(edge_rows)[0]
-
-
 def _resolve_component(pdf: pd.DataFrame) -> pd.DataFrame:
     """Sequential union-find for one component, refusing main+main
     unions; edge order = the deterministic global order."""
@@ -293,11 +344,7 @@ def _component_conflicts(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def build_clusters(
-    same_as: DataFrame,
-    driver_threshold: int = 200_000,
-    return_conflicts: bool = False,
-):
+def build_clusters(same_as: DataFrame, return_conflicts: bool = False):
     """same_as edges → (member_id, canonical_id), main-id constraint
     enforced. Singleton ids (no edges) are their own cluster and are
     simply absent — canonicalize() falls through to identity.
@@ -306,28 +353,27 @@ def build_clusters(
     refused main+main merges as (main_a, main_b, edge_a, edge_b) rows
     (xref-builder.cc:238 conflict frames), from BOTH paths.
 
-    Edge sets up to ``driver_threshold`` run as a single driver-side
-    union-find (the exact sequential semantics; xref tables are
-    dimension-sized, and a dozen iterative Spark jobs for 10^4 edges is
-    pure scheduling overhead). Larger sets take the distributed path:
-    min-label CC + per-conflicted-component repair — result-identical,
-    proven by tests that run both."""
-    # localCheckpoint, not persist+unpersist: the returned plans are
-    # LAZY — an unpersist() at plan-build time would evict the cache
-    # before the caller ever materializes them, recomputing the
-    # normalize+distinct shuffle; the checkpoint materializes edges
-    # once and truncates lineage for the whole lifetime of the result
-    edges = normalized_edges(same_as).localCheckpoint()
-    n_edges = edges.count()
-    if n_edges <= driver_threshold:
-        rows, conflicts = _sequential_union(
-            [(r["a"], r["b"]) for r in edges.collect()]
-        )
+    Edge sets up to ``DRIVER_EDGE_LIMIT`` are fetched once and run as a
+    single driver-side sequential union-find (the exact xref.cc
+    semantics); ``kg.xref.build_clusters.rounds`` then reads 0. Larger
+    sets take the distributed path: star-round CC + per-conflicted-
+    component repair — result-identical, proven by tests that force
+    both."""
+    edges = normalized_edges(same_as)
+    rows = small_edge_list(edges)
+    if rows is not None:
+        rows, conflicts = _sequential_union(rows)
         spark = same_as.sparkSession
         clusters = spark.createDataFrame(rows, schema=CLUSTERS_SCHEMA)
         if return_conflicts:
             return clusters, spark.createDataFrame(conflicts, schema=CONFLICTS_SCHEMA)
         return clusters
+    # localCheckpoint, not persist+unpersist: the returned plans are
+    # LAZY — an unpersist() at plan-build time would evict the cache
+    # before the caller ever materializes them, recomputing the
+    # normalize+distinct shuffle; the checkpoint materializes edges
+    # once and truncates lineage for the whole lifetime of the result
+    edges = edges.localCheckpoint()
     labels = connected_components(edges)
 
     mains_per_comp = (

@@ -20,8 +20,11 @@ Scale notes (the whole point of each design):
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 
@@ -600,29 +603,51 @@ def dedup_clusters(
     (minhash-LSH+jaccard, simhash, embedding near-dup) into a keep-list:
     connected components over the pair graph, canonical representative
     = min doc id per component. Returns (doc_id, keep_id, cluster_size)
-    for every document in at least one pair; untouched docs are absent
-    (identity fall-through — `keep = coalesce(keep_id, doc_id)` on the
-    consumer side, the same contract as the xref cluster map).
+    for every document in at least one pair, a self-pair included (it is
+    its own cluster of size 1); untouched docs are absent (identity
+    fall-through — `keep = coalesce(keep_id, doc_id)` on the consumer
+    side, the same contract as the xref cluster map). Ids keep the
+    input's type. Transitive closure is the CORRECT semantics for
+    near-dup keep-lists at corpus scale: A~B and B~C must not both
+    survive with B deleted.
 
-    Scale shape: components use the same large-star/small-star
-    alternation as identifier xref (kg/xref.py — O(log n) rounds on any
+    Scale shape: the same size switch as identifier xref
+    (``kg.xref.DRIVER_EDGE_LIMIT``). A pair list at or below the limit —
+    every corpus_qc pass — is fetched once and labelled by a driver
+    union-find, sizes counted on the driver, and returned as one local
+    frame; ``operators.dedup.dedup_clusters.rounds`` then reads 0. A
+    larger list runs the large-star/small-star rounds (O(log n) on any
     topology; a chain of 10^6 near-dup pairs converges), then one
-    unordered count window over the component label for cluster_size
-    (a single exchange, no groupBy + join). Transitive closure is the
-    CORRECT semantics for near-dup keep-lists at corpus scale: A~B and
-    B~C must not both survive with B deleted."""
+    unordered count window over the component label for cluster_size."""
     from pyspark.sql.window import Window
 
-    from ..kg.xref import connected_components
+    from ..kg import xref
 
     edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    comp = connected_components(edges)
+    rows = xref.small_edge_list(edges)
+    if rows is not None:
+        labels = xref.min_label_components(rows)
+        sizes = Counter(labels.values())
+        # the id type the star path's symmetric union would widen to
+        id_type = edges.select("a").union(edges.select("b")).schema[0].dataType
+        schema = StructType([
+            StructField("doc_id", id_type),
+            StructField("keep_id", id_type),
+            StructField("cluster_size", LongType(), False),
+        ])
+        return pairs.sparkSession.createDataFrame(
+            [(d, k, sizes[k]) for d, k in labels.items()], schema
+        )
+    comp = xref.connected_components(edges)
     # cluster_size via an unordered count window over the component key:
     # ONE exchange of the label rows instead of the groupBy + join shape
     # (two exchanges over the same rows + a join probe) — the window is
     # partitioned by the same key the aggregation would group on, so the
     # second shuffle bought nothing (guide §2.4; measured 3x on the
     # QC-shaped label set, output identical by exceptAll both ways).
+    # One giant component still sorts all its rows in a single task
+    # (ADVICE r06); that skew exists only above DRIVER_EDGE_LIMIT, since
+    # smaller pair lists never reach this window.
     return comp.select(
         F.col("id").alias("doc_id"),
         F.col("component").alias("keep_id"),

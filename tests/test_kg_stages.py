@@ -7,6 +7,7 @@ import pytest
 from sling_spark.kg.assets import build_asset_store, load_assets, seed_dataframes
 from sling_spark.kg.documents import build_documents, idf_table
 from sling_spark.kg.mentions import annotate, mentions_of, relations_of
+from sling_spark.kg import xref
 from sling_spark.kg.relations import facts_df
 from sling_spark.kg.xref import build_clusters
 from sling_spark.oracle import kg_oracle
@@ -133,12 +134,12 @@ def test_xref_clusters_match_oracle(spark, stages):
     assert got == want
     # the distributed path (min-label CC + per-conflicted-component
     # repair) must be result-identical to the driver union-find
-    dist = {
-        r["member_id"]: r["canonical_id"]
-        for r in build_clusters(
-            stages["seed"]["same_as"], driver_threshold=0
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(xref, "DRIVER_EDGE_LIMIT", 0)
+        dist = {
+            r["member_id"]: r["canonical_id"]
+            for r in build_clusters(stages["seed"]["same_as"]).collect()
+        }
     assert dist == want
     # adversarial invariants
     assert got["github:apache/spark"] == "Q1"  # case-variant edge folded in
@@ -519,10 +520,10 @@ def test_xref_conflict_reporting(spark):
     assert (ma, mb) == ("Q6", "Q7")
     assert "pypi:torch" in (ea, eb)
 
-    _cl2, conf2 = build_clusters(
-        seed["same_as"], driver_threshold=0, return_conflicts=True
-    )
-    assert {tuple(r) for r in conf2.collect()} == driver
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(xref, "DRIVER_EDGE_LIMIT", 0)
+        _cl2, conf2 = build_clusters(seed["same_as"], return_conflicts=True)
+        assert {tuple(r) for r in conf2.collect()} == driver
 
     # adversarial order: a chain that reaches the second main id LAST,
     # plus extra edges whose order could flip the refusal point
@@ -539,9 +540,11 @@ def test_xref_conflict_reporting(spark):
         "id_a string, id_b string, priority_a int, priority_b int, redirect boolean",
     )
     cl_a, conf_a = build_clusters(sa, return_conflicts=True)
-    cl_b, conf_b = build_clusters(sa, driver_threshold=0, return_conflicts=True)
-    assert {tuple(r) for r in cl_a.collect()} == {tuple(r) for r in cl_b.collect()}
-    ca, cb = {tuple(r) for r in conf_a.collect()}, {tuple(r) for r in conf_b.collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(xref, "DRIVER_EDGE_LIMIT", 0)
+        cl_b, conf_b = build_clusters(sa, return_conflicts=True)
+        assert {tuple(r) for r in cl_a.collect()} == {tuple(r) for r in cl_b.collect()}
+        ca, cb = {tuple(r) for r in conf_a.collect()}, {tuple(r) for r in conf_b.collect()}
     assert ca == cb and len(ca) >= 1
     assert all(m[:2] == ("Q1", "Q2") for m in ca)
 

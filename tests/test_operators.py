@@ -3,6 +3,7 @@ entry contract."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -700,6 +701,33 @@ def test_dedup_clusters_transitive_keep_list(spark):
         for r in dedup_clusters(pairs).collect()
     }
     assert got == {1: (1, 3), 2: (1, 3), 3: (1, 3), 7: (7, 2), 9: (7, 2)}
+
+
+@pytest.mark.parametrize("path", ["driver", "star_rounds"])
+def test_dedup_clusters_self_and_repeated_pairs(spark, monkeypatch, path):
+    """A document whose only pair is a self-pair is its own cluster of
+    size 1 (it is in a pair, so it is not absent); duplicate and reversed
+    pairs collapse to one cluster of size 2. Both sides of the size
+    switch."""
+    from sling_spark.kg import xref
+    from sling_spark.operators.dedup import dedup_clusters
+
+    if path == "star_rounds":
+        monkeypatch.setattr(xref, "DRIVER_EDGE_LIMIT", 0)
+
+    def keep_list(rows):
+        pairs = spark.createDataFrame(rows, "doc_a string, doc_b string")
+        return {
+            r["doc_id"]: (r["keep_id"], r["cluster_size"])
+            for r in dedup_clusters(pairs).collect()
+        }
+
+    assert keep_list([("x", "x"), ("a", "b")]) == {
+        "x": ("x", 1), "a": ("a", 2), "b": ("a", 2),
+    }
+    assert keep_list([("a", "b"), ("b", "a"), ("a", "b")]) == {
+        "a": ("a", 2), "b": ("a", 2),
+    }
 
 
 def test_lm_perplexity_hand_checked(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -120,25 +121,140 @@ def _random_edge_set(seed: int, n_nodes: int, n_edges: int):
     return edges
 
 
-def test_xref_distributed_equals_driver_on_random_graphs(spark):
+def test_xref_distributed_equals_driver_on_random_graphs(spark, monkeypatch):
     """Randomized equivalence: distributed CC + per-component repair ==
     global sequential union-find, on graphs with many main-id conflicts
     (every Q:-node is a main id, so refusals are frequent)."""
+    from sling_spark.kg import xref
     from sling_spark.kg.xref import build_clusters
 
     schema = "id_a string, id_b string, priority_a int, priority_b int, redirect boolean"
+    limit = xref.DRIVER_EDGE_LIMIT
     for seed in (7, 21, 99):
         edges = _random_edge_set(seed, n_nodes=40, n_edges=60)
         df = spark.createDataFrame(edges, schema=schema)
+        monkeypatch.setattr(xref, "DRIVER_EDGE_LIMIT", limit)
         drv = {
             (r["member_id"], r["canonical_id"])
             for r in build_clusters(df).collect()
         }
+        monkeypatch.setattr(xref, "DRIVER_EDGE_LIMIT", 0)
         dist = {
             (r["member_id"], r["canonical_id"])
-            for r in build_clusters(df, driver_threshold=0).collect()
+            for r in build_clusters(df).collect()
         }
         assert drv == dist, f"seed {seed}"
+
+
+def _mixed_pair_graph(seed: int) -> list[tuple[int, int]]:
+    """Chains, stars, cross edges and disjoint pairs over ids whose
+    numeric order differs from insertion order, plus one self-pair, one
+    reversed and one repeated pair."""
+    rng = random.Random(seed)
+    ids = rng.sample(range(100_000), 400)
+    pairs: list[tuple[int, int]] = []
+    for c in range(3):
+        chain = ids[40 * c: 40 * c + 40]
+        pairs += list(zip(chain, chain[1:]))
+    for s in range(2):
+        hub, *leaves = ids[120 + 30 * s: 150 + 30 * s]
+        pairs += [(hub, leaf) for leaf in leaves]
+    pool = ids[:180]
+    pairs += [tuple(rng.sample(pool, 2)) for _ in range(15)]
+    pairs += [(ids[200 + 2 * i], ids[201 + 2 * i]) for i in range(20)]
+    pairs += [(ids[399], ids[399]), pairs[0][::-1], pairs[1]]
+    return pairs
+
+
+def _jobs_in_group(sc, fn) -> int:
+    """Spark jobs that ``fn`` submits, counted through a job group."""
+    import uuid
+
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_dedup_clusters_driver_path_equals_star_rounds(spark, monkeypatch, id_type):
+    """Both sides of the DRIVER_EDGE_LIMIT switch give exceptAll-identical
+    (doc_id, keep_id, cluster_size) rows and the same id type. String ids
+    order differently from the same graph's long ids, so the keep ids
+    differ between the two parametrizations."""
+    from sling_spark.kg import xref
+    from sling_spark.operators.dedup import dedup_clusters
+
+    limit = xref.DRIVER_EDGE_LIMIT
+    for seed in (7, 21, 99):
+        pairs = _mixed_pair_graph(seed)
+        if id_type == "string":
+            pairs = [(f"doc/{a}", f"doc/{b}") for a, b in pairs]
+        df = spark.createDataFrame(pairs, f"doc_a {id_type}, doc_b {id_type}")
+        monkeypatch.setattr(xref, "DRIVER_EDGE_LIMIT", limit)
+        monkeypatch.setattr(xref.connected_components, "last_rounds", 0, raising=False)
+        drv = dedup_clusters(df)
+        assert xref.connected_components.last_rounds == 0  # no star rounds ran
+        monkeypatch.setattr(xref, "DRIVER_EDGE_LIMIT", 0)
+        star = dedup_clusters(df)
+        assert xref.connected_components.last_rounds >= 2
+        assert drv.schema.simpleString() == star.schema.simpleString()
+        n_nodes = len({x for p in pairs for x in p})
+        assert drv.count() == star.count() == n_nodes, f"seed {seed}"
+        assert drv.exceptAll(star).count() == 0, f"seed {seed}"
+        assert star.exceptAll(drv).count() == 0, f"seed {seed}"
+
+
+def test_size_switch_job_counts(spark, monkeypatch, tmp_path):
+    """Below DRIVER_EDGE_LIMIT a corpus_qc-sized pair list (24 fork
+    chains of 6 docs and 36 mirrors, 228 pairs, read from a 4-file
+    Parquet table like the QC chain's verified pairs) is clustered and
+    written in at most 5 Spark jobs; forced star rounds take about 30 on
+    this graph. The seed KB's build_clusters makes exactly one collect —
+    no checkpoint, no count — before its driver union-find."""
+    from sling_spark.kg.assets import seed_dataframes
+    from sling_spark.kg.xref import build_clusters
+    from sling_spark.operators.dedup import dedup_clusters
+
+    pairs = []
+    for c in range(24):
+        chain = [f"fork/{c:02d}/{i}" for i in range(6)]
+        pairs += list(zip(chain, chain[1:])) + list(zip(chain, chain[2:5]))
+    pairs += [(f"doc/{m:02d}", f"doc/{m:02d}+mirror") for m in range(36)]
+    assert len(pairs) == 228
+    src = str(tmp_path / "verified")
+    spark.createDataFrame(pairs, "doc_a string, doc_b string").repartition(4) \
+        .write.parquet(src)
+    verified = spark.read.parquet(src)
+    out = str(tmp_path / "clusters")
+    sc = spark.sparkContext
+    n_jobs = _jobs_in_group(
+        sc, lambda: dedup_clusters(verified).write.parquet(out)
+    )
+    assert n_jobs <= 5, n_jobs
+    clusters = spark.read.parquet(out)
+    assert clusters.count() == 24 * 6 + 36 * 2
+    assert clusters.filter("keep_id = 'fork/07/0'").count() == 6
+
+    seed = seed_dataframes(spark)
+    frame_cls = type(seed["same_as"])
+    actions: list[str] = []
+    for name in ("collect", "count", "localCheckpoint"):
+        real = getattr(frame_cls, name)
+
+        def spy(self, *a, _name=name, _real=real, **kw):
+            actions.append(_name)
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(frame_cls, name, spy)
+    n_jobs = _jobs_in_group(sc, lambda: build_clusters(seed["same_as"]))
+    assert actions == ["collect"]
+    # the collect plus the map stage of normalized_edges' distinct, which
+    # adaptive execution submits as a job of its own
+    assert n_jobs <= 2, n_jobs
 
 
 def test_connected_components_chain_converges_in_log_rounds(spark):
