@@ -360,9 +360,9 @@ def build_clusters(same_as: DataFrame, return_conflicts: bool = False):
     component repair — result-identical, proven by tests that force
     both."""
     edges = normalized_edges(same_as)
-    rows = small_edge_list(edges)
-    if rows is not None:
-        rows, conflicts = _sequential_union(rows)
+    edge_rows = small_edge_list(edges)
+    if edge_rows is not None:
+        rows, conflicts = _sequential_union(edge_rows)
         spark = same_as.sparkSession
         clusters = spark.createDataFrame(rows, schema=CLUSTERS_SCHEMA)
         if return_conflicts:
