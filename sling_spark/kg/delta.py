@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .reconcile import (
     _ITEM_REF_RE,
     invert_statements,
@@ -462,11 +463,8 @@ def demo_sources(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     """(sources, delta) DataFrames for the demo batch."""
     from .assets import ITEMS_DDL
 
-    sources = spark.createDataFrame(
-        seed_source_rows(), schema=ITEMS_DDL + ", source_priority int"
-    )
-    delta = spark.createDataFrame(
-        demo_delta_rows(),
-        schema=ITEMS_DDL + ", source_priority int, deleted boolean",
+    sources = local_frame(spark, seed_source_rows(), ITEMS_DDL + ", source_priority int")
+    delta = local_frame(
+        spark, demo_delta_rows(), ITEMS_DDL + ", source_priority int, deleted boolean"
     )
     return sources, delta

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import kb
 from .xref import canonicalize
 
@@ -59,12 +60,13 @@ def invert_statements(items: DataFrame) -> DataFrame:
     one shuffle keyed by the inverse fragments only (orders of magnitude
     below item scale)."""
     spark = items.sparkSession
-    inv_df = spark.createDataFrame(
+    inv_df = local_frame(
+        spark,
         [
             (pid, cfg["inverse"], dict(cfg.get("qualifiers", {})))
             for pid, cfg in sorted(kb.INVERSIONS.items())
         ],
-        schema="pid string, inverse string, qmap map<string,string>",
+        "pid string, inverse string, qmap map<string,string>",
     )
     pri = (
         F.coalesce("source_priority", F.lit(0))

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..session import local_frame
 
 
 def _size_guarded_broadcast(df: DataFrame, limit: int) -> DataFrame:
@@ -614,9 +615,10 @@ def dedup_clusters(
     Scale shape: the same size switch as identifier xref
     (``kg.xref.DRIVER_EDGE_LIMIT``). A pair list at or below the limit —
     every corpus_qc pass — is fetched once and labelled by a driver
-    union-find, sizes counted on the driver, and returned as one local
-    frame; ``operators.dedup.dedup_clusters.rounds`` then reads 0. A
-    larger list runs the large-star/small-star rounds (O(log n) on any
+    union-find, sizes counted on the driver, and returned as one Arrow
+    ``LocalRelation`` (``session.local_frame``);
+    ``operators.dedup.dedup_clusters.rounds`` then reads 0. A larger
+    list runs the large-star/small-star rounds (O(log n) on any
     topology; a chain of 10^6 near-dup pairs converges), then one
     unordered count window over the component label for cluster_size."""
     from pyspark.sql.window import Window
@@ -635,8 +637,8 @@ def dedup_clusters(
             StructField("keep_id", id_type),
             StructField("cluster_size", LongType(), False),
         ])
-        return pairs.sparkSession.createDataFrame(
-            [(d, k, sizes[k]) for d, k in labels.items()], schema
+        return local_frame(
+            pairs.sparkSession, [(d, k, sizes[k]) for d, k in labels.items()], schema
         )
     comp = xref.connected_components(edges)
     # cluster_size via an unordered count window over the component key:

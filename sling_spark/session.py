@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Conservative Arrow batch size: mention detection carries whole documents
 # per row; 1-4 KB content x 10k rows ~= 40 MB per batch, well inside
@@ -101,3 +102,22 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (dicts or tuples in field
+    order) with ``schema`` (DDL string or StructType), built from an Arrow
+    table. Spark plans it as a ``LocalRelation``: scans stay in the JVM.
+    ``createDataFrame`` over a Python list plans a ``LogicalRDD`` over a
+    pickled Python RDD instead, so every scan of it starts Python-worker
+    tasks (on the seed KB that was most of a pipeline call's CPU)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, schema=struct)

@@ -369,3 +369,20 @@ def test_every_module_is_reachable_from_an_entry_point():
     assert not unreached, f"no entry point imports {unreached}"
     stale = sorted(PENDING_UNREACHED - (set(modules) - reached))
     assert not stale, f"reached or deleted, drop from PENDING_UNREACHED: {stale}"
+
+
+def test_pipeline_frames_from_driver_rows_go_through_local_frame():
+    """No module under ``sling_spark/kg/`` or ``sling_spark/operators/``
+    names ``createDataFrame``: frames over driver-held rows come from
+    ``session.local_frame`` (an Arrow LocalRelation). A list handed to
+    ``createDataFrame`` becomes a pickled Python RDD, and every scan of
+    it starts Python-worker tasks."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "sling_spark"
+    found = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for package in ("kg", "operators")
+        for path in sorted((root / package).rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
+    ]
+    assert not found, f"use session.local_frame instead of createDataFrame at {found}"

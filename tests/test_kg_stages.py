@@ -549,6 +549,91 @@ def test_xref_conflict_reporting(spark):
     assert all(m[:2] == ("Q1", "Q2") for m in ca)
 
 
+def _assert_jvm_frame(frame, reference):
+    """``frame`` plans no LogicalRDD (a pickled Python RDD whose every
+    scan starts Python workers) and holds the schema and the rows of
+    ``reference``, a ``createDataFrame(list, schema)`` frame."""
+    plan = frame._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in plan, plan
+    assert frame.schema == reference.schema
+    assert sorted(frame.collect(), key=repr) == sorted(reference.collect(), key=repr)
+
+
+def test_driver_built_frames_stay_in_the_jvm(spark):
+    """Every frame the library builds from driver-held rows is an Arrow
+    LocalRelation with the schema and rows the pickled list path gives:
+    the seed KB, the demo delta sources, the xref driver clusters and
+    conflicts, and the near-dup keep-list."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from sling_spark.kg.assets import ALIAS_SCHEMA, ITEMS_DDL
+    from sling_spark.kg.delta import demo_delta_rows, demo_sources, seed_source_rows
+    from sling_spark.kg.reconcile import invert_statements
+    from sling_spark.operators.dedup import dedup_clusters
+    from sling_spark.session import local_frame
+    from sling_spark.sources import kb
+
+    pickled = spark.createDataFrame
+    seed = seed_dataframes(spark)
+    literals = {
+        "items": (kb.entities(), ITEMS_DDL),
+        "aliases": (kb.alias_rows(), ALIAS_SCHEMA),
+        "same_as": (
+            kb.same_as_edges(),
+            "id_a string, id_b string, priority_a int, priority_b int, redirect boolean",
+        ),
+        "links": (kb.links_rows(), "src string, dst string, count int"),
+        "popularity": (kb.popularity_rows(), "id string, count int"),
+        "fragments": (kb.source_item_fragments(), ITEMS_DDL + ", source_priority int"),
+    }
+    assert set(literals) == set(seed)
+    for name, (rows, ddl) in literals.items():
+        _assert_jvm_frame(seed[name], pickled(rows, ddl))
+    statements = [s for r in kb.source_item_fragments() for s in r["statements"]]
+    assert any(s["qualifiers"] for s in statements)  # map qualifiers covered
+    assert any(r["statements"] == [] for r in kb.entities())  # empty arrays covered
+    # null qualifiers and arrays, and tuple rows, through the same helper
+    odd = [
+        ("Q1", None, None, [{"pid": "P1", "object": "Q2", "qualifiers": None}]),
+        ("Q2", "two", [], []),
+        ("Q3", "three", ["t"], [{"pid": "P2", "object": "x", "qualifiers": {"P9": "v"}}]),
+    ]
+    _assert_jvm_frame(local_frame(spark, odd, ITEMS_DDL), pickled(odd, ITEMS_DDL))
+    assert "LogicalRDD" not in (
+        invert_statements(seed["items"])._jdf.queryExecution().analyzed().toString()
+    )
+
+    sources, delta = demo_sources(spark)
+    _assert_jvm_frame(sources, pickled(seed_source_rows(), ITEMS_DDL + ", source_priority int"))
+    _assert_jvm_frame(
+        delta, pickled(demo_delta_rows(), ITEMS_DDL + ", source_priority int, deleted boolean")
+    )
+
+    clusters, conflicts = build_clusters(seed["same_as"], return_conflicts=True)
+    want_rows, want_conflicts = xref._sequential_union(
+        [tuple(r) for r in xref.normalized_edges(seed["same_as"]).collect()]
+    )
+    _assert_jvm_frame(clusters, pickled(want_rows, xref.CLUSTERS_SCHEMA))
+    _assert_jvm_frame(conflicts, pickled(want_conflicts, xref.CONFLICTS_SCHEMA))
+    assert conflicts.count() == 1
+
+    # keep-lists: chain 1-2-3, a self-pair, a repeated reversed pair
+    for id_type, ids in ((LongType(), [1, 2, 3, 5, 7, 8]), (StringType(), list("abcegh"))):
+        n1, n2, n3, n5, n7, n8 = ids
+        pairs = pickled(
+            [(n1, n2), (n3, n2), (n5, n5), (n7, n8), (n8, n7)],
+            StructType([StructField("doc_a", id_type), StructField("doc_b", id_type)]),
+        )
+        schema = StructType([
+            StructField("doc_id", id_type),
+            StructField("keep_id", id_type),
+            StructField("cluster_size", LongType(), False),
+        ])
+        want = [(n1, n1, 3), (n2, n1, 3), (n3, n1, 3), (n5, n5, 1), (n7, n7, 2), (n8, n7, 2)]
+        _assert_jvm_frame(dedup_clusters(pairs), pickled(want, schema))
+        _assert_jvm_frame(dedup_clusters(pairs.limit(0)), pickled([], schema))
+
+
 def test_phrase_structure_annotator(spark, stages):
     """Phrase-structure analog (phrases.cc:37-160): 'Apache Spark'
     resolved to Q1 gains the sub-mention 'Apache' -> Q50 (the

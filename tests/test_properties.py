@@ -213,8 +213,9 @@ def test_size_switch_job_counts(spark, monkeypatch, tmp_path):
     chains of 6 docs and 36 mirrors, 228 pairs, read from a 4-file
     Parquet table like the QC chain's verified pairs) is clustered and
     written in at most 5 Spark jobs; forced star rounds take about 30 on
-    this graph. The seed KB's build_clusters makes exactly one collect —
-    no checkpoint, no count — before its driver union-find."""
+    this graph. The seed KB's build_clusters makes exactly one Arrow
+    fetch — no collect, no checkpoint, no count — before its driver
+    union-find."""
     from sling_spark.kg.assets import seed_dataframes
     from sling_spark.kg.xref import build_clusters
     from sling_spark.operators.dedup import dedup_clusters
@@ -242,7 +243,7 @@ def test_size_switch_job_counts(spark, monkeypatch, tmp_path):
     seed = seed_dataframes(spark)
     frame_cls = type(seed["same_as"])
     actions: list[str] = []
-    for name in ("collect", "count", "localCheckpoint"):
+    for name in ("collect", "count", "localCheckpoint", "toArrow"):
         real = getattr(frame_cls, name)
 
         def spy(self, *a, _name=name, _real=real, **kw):
@@ -251,8 +252,8 @@ def test_size_switch_job_counts(spark, monkeypatch, tmp_path):
 
         monkeypatch.setattr(frame_cls, name, spy)
     n_jobs = _jobs_in_group(sc, lambda: build_clusters(seed["same_as"]))
-    assert actions == ["collect"]
-    # the collect plus the map stage of normalized_edges' distinct, which
+    assert actions == ["toArrow"]
+    # the fetch plus the map stage of normalized_edges' distinct, which
     # adaptive execution submits as a job of its own
     assert n_jobs <= 2, n_jobs
 
